@@ -1,8 +1,9 @@
 """Per-layer metrics of the traced pass, and the end-to-end metric each
 one should move on which workload.
 
-Time metrics (``_s``) are self seconds: a span's wall time minus its child
-spans and minus the benchmark's own bookkeeping inside it. ``<layer>.
+Layer time metrics (``_s``) are self seconds: a span's wall time minus its
+child spans and minus the benchmark's own bookkeeping inside it; the
+``session.*`` and ``trace.*`` times are wall seconds. ``<layer>.
 spark_jobs``/``spark_stages``/``tasks_failed`` count the Spark jobs run,
 the stages actually submitted (skipped stages excluded) and the failed
 tasks while a span of that layer was the innermost open one, read from
