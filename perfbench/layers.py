@@ -7,12 +7,25 @@ child spans and minus the benchmark's own bookkeeping inside it; the
 spark_jobs``/``spark_stages``/``tasks_failed`` count the Spark jobs run,
 the stages actually submitted (skipped stages excluded) and the failed
 tasks while a span of that layer was the innermost open one, read from
-``statusTracker``. A layer that does not run on a workload reports 0.
+``statusTracker``. A layer that does not run on a workload reports 0, and
+so do ``indexes.study_s`` (the studies tree is not written) and the
+queries below that are not in ``suite.QUERIES``.
 """
 
 from __future__ import annotations
 
-from suite import QUERIES
+# Registry queries with per-layer metrics.
+QUERIES = [
+    "q1_pricing_summary",
+    "q5_local_supplier_volume",
+    "q9_profit_by_nation_year",
+    "pipe_customer_document",
+    "ev_tumbling_hourly",
+    "dd_minhash_lsh_candidates",
+    "dd_ngram_jaccard_pairs",
+    "ann_topk_bruteforce",
+    "tx_repetition_metrics",
+]
 
 # metric -> (unit, better, moves end-to-end metric, on workload)
 MAPPING: dict[str, tuple[str, str, str, str]] = {

@@ -11,13 +11,14 @@ pass only when the previous one has finished and been checked.
 Workloads (see README.md in this directory):
 
 - ``release_full``: a generated release through pre-process and process,
-  from raw TSV to the three index trees.
-- ``operator_suite``: nine registry queries over generated star-schema
+  from raw TSV to the donors and files index trees.
+- ``operator_suite``: two registry queries over generated star-schema
   tables, each result checked against its DuckDB oracle.
 
 A run starts a fresh driver and measures from its first pass, as a release
-job launched on its own would run. The traced run adds one traced pass
-after the measured ones.
+job launched on its own would run. A traced run measures one traced pass
+on a fresh driver instead, and gives its overhead against the job times
+that untraced runs of the same workload recorded in the checkout.
 
 The last line of standard output is one JSON object
 ``{"correct", "attempted", "failed", "metrics"}``; with ``--trace 0`` the
@@ -42,6 +43,10 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench")
 SCRATCH = os.path.join(WORK, "scratch")
+# job_s of the untraced runs, one file per workload: the reference a
+# traced run gives its overhead against.
+UNTRACED = os.path.join(WORK, "untraced")
+UNTRACED_KEEP = 10
 
 SETUP_REPEATS = 3
 
@@ -192,7 +197,24 @@ def end_to_end(passes: list[dict], setup_s: float) -> dict:
     }
 
 
-def per_layer(tracer, traced: dict, untraced_s: float, session_s: float,
+def record_untraced(workload: str, job_s: float) -> None:
+    os.makedirs(UNTRACED, exist_ok=True)
+    with open(os.path.join(UNTRACED, f"{workload}.txt"), "a") as fh:
+        fh.write(f"{job_s!r}\n")
+
+
+def recorded_untraced(workload: str) -> float | None:
+    """Median job_s of the last untraced runs of ``workload`` in this
+    checkout, or None when there were none."""
+    try:
+        with open(os.path.join(UNTRACED, f"{workload}.txt")) as fh:
+            values = [float(line) for line in fh if line.strip()]
+    except FileNotFoundError:
+        return None
+    return statistics.median(values[-UNTRACED_KEEP:]) if values else None
+
+
+def per_layer(tracer, traced: dict, untraced_s: float | None, session_s: float,
               rss_mb: float) -> dict:
     from layers import PER_LAYER
 
@@ -201,11 +223,11 @@ def per_layer(tracer, traced: dict, untraced_s: float, session_s: float,
     for metric in PER_LAYER:
         head, _, field = metric.rpartition(".")
         if metric == "trace.overhead_s":
-            v = traced["wall"] - untraced_s
+            v = traced["wall"] - untraced_s if untraced_s else 0.0
         elif metric == "trace.job_s":
             v = traced["wall"]
         elif metric == "trace.untraced_job_s":
-            v = untraced_s
+            v = untraced_s or 0.0
         elif metric == "session.start_s":
             v = session_s
         elif metric == "session.jvm_peak_rss_mb":
@@ -261,27 +283,23 @@ def main(argv=None) -> int:
 
         memory = JvmMemory(spark.sparkContext)
         memory.reset()
-        passes, attempted, failed = measure(workload, args.seconds, log)
-        if not passes:
-            log("every pass failed")
-            return 1
         if args.trace:
             from layers import PER_LAYER as units
             from spans import Tracer
 
-            # One traced pass after the measured ones. A fair untraced
-            # reference would need a third pass on the warm driver, which
-            # does not fit the run-time limit, so the overhead is given
-            # against the last measured pass (see README.md).
+            # One traced pass on the fresh driver, like the untraced runs'
+            # passes, so its overhead is against their recorded job_s.
             tracer = Tracer(spark.sparkContext)
-            attempted += 1
+            attempted, failed = 1, 0
             try:
                 traced = workload.run_pass(tracer)
             except Exception:
                 log(f"traced pass failed:\n{traceback.format_exc()}")
                 return 1
-            untraced_s = passes[-1]["wall"]
-            log(f"untraced {untraced_s:.3f}s, traced {traced['wall']:.3f}s")
+            untraced_s = recorded_untraced(args.workload)
+            if untraced_s is None:
+                log("no untraced run recorded in this checkout: overhead reads 0")
+            log(f"traced {traced['wall']:.3f}s, untraced median {untraced_s}")
             metrics = per_layer(tracer, traced, untraced_s, session_s, memory.peak_mb())
             os.makedirs(os.path.join(WORK, "traces"), exist_ok=True)
             tracer.write(
@@ -289,8 +307,13 @@ def main(argv=None) -> int:
                 {"workload": args.workload, "seed": args.seed,
                  "untraced_job_s": untraced_s, "traced_job_s": traced["wall"]})
         else:
+            passes, attempted, failed = measure(workload, args.seconds, log)
+            if not passes:
+                log("every pass failed")
+                return 1
             metrics = end_to_end(passes, setup_s)
             units = END_TO_END
+            record_untraced(args.workload, metrics["job_s"])
         snap1 = sys_snapshot()
         log(f"ops_failed_ratio {failed / attempted:.3f} ({failed}/{attempted}); "
             f"loadavg {snap1['loadavg']}; steal {steal_pct(snap0, snap1):.2f}%")

@@ -1,7 +1,8 @@
-"""The operator-query suite: nine registry queries over the generated
-star-schema tables. One pass runs every query once and collects its
-result; every result must equal the query's DuckDB oracle result,
-computed once in set-up."""
+"""The operator-query suite: two registry queries over the generated
+star-schema tables, a TPC-H star-schema join (``queries/``) and an exact
+vector top-k (``operators/similarity``). One pass runs every query once
+and collects its result; every result must equal the query's DuckDB
+oracle result, computed once in set-up."""
 
 from __future__ import annotations
 
@@ -12,17 +13,7 @@ import duckdb
 
 from cqdg_etl_spark.queries import REGISTRY
 
-QUERIES = [
-    "q1_pricing_summary",
-    "q5_local_supplier_volume",
-    "q9_profit_by_nation_year",
-    "pipe_customer_document",
-    "ev_tumbling_hourly",
-    "dd_minhash_lsh_candidates",
-    "dd_ngram_jaccard_pairs",
-    "ann_topk_bruteforce",
-    "tx_repetition_metrics",
-]
+QUERIES = ["q5_local_supplier_volume", "ann_topk_bruteforce"]
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
