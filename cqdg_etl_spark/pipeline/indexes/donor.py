@@ -23,25 +23,20 @@ def build_donor_index(
     donor_per_file, _, combos = S.prepare_summary_frames(donor, file)
     by_category = S.files_by_field(donor_per_file, combos, "data_category")
     by_strategy = S.files_by_field(donor_per_file, combos, "experimental_strategy")
-    available, available_only = S.clinical_data_available_per_donor(combos, data)
+    available = S.clinical_data_available_per_donor(combos, data)
 
     keys = ["study_id", "submitter_donor_id"]
     summary_group = (
         by_category.join(by_strategy, keys)
         .join(available, keys)
-        .join(available_only, keys)
-        .filter(F.col("study_id").isNotNull())
-        .filter(F.col("submitter_donor_id").isNotNull())
-        .groupBy(*keys)
-        .agg(
-            F.first(
-                F.struct(
-                    "data_category",
-                    "experimental_strategy",
-                    "clinical_data_available",
-                    "clinical_data_available_only",
-                )
-            ).alias("summary")
+        .select(
+            *keys,
+            F.struct(
+                "data_category",
+                "experimental_strategy",
+                "clinical_data_available",
+                "clinical_data_available_only",
+            ).alias("summary"),
         )
     )
 

@@ -35,14 +35,11 @@ def build_study_index(
     summary_group = (
         by_category.join(by_strategy, "study_id")
         .join(clinical, "study_id")
-        .filter(F.col("study_id").isNotNull())
-        .groupBy("study_id")
-        .agg(
-            F.first(
-                F.struct(
-                    "data_category", "experimental_strategy", "clinical_data_available"
-                )
-            ).alias("summary")
+        .select(
+            "study_id",
+            F.struct(
+                "data_category", "experimental_strategy", "clinical_data_available"
+            ).alias("summary"),
         )
     )
 

@@ -1,76 +1,80 @@
 """Per-study / per-donor availability summaries
 (reference: indexes/Summary.scala).
 
-Scale fix vs the reference: the reference repartition(1)s both sides of
-every domain cross join ("infinite loop" workaround,
-Summary.scala:9,23-25) — a driver-choking serialization point. Domains
-here are tiny distinct frames, so we BROADCAST them: the cross join
-becomes a BroadcastNestedLoopJoin and the big side never moves.
+Each output is one aggregation over a narrow frame, where the reference
+chains full-outer joins:
+
+- The 7 clinical frames are merged by a union-all. The reference chains
+  full-outer joins on ``(study, donor, key, available)`` per donor and
+  ``(study, key, donors)`` per study, but ``key`` is a different literal
+  in each frame, so no two rows ever match: the chain is a union.
+- Per donor, a frame is available when one of its rows for the donor has
+  no NULL column: the reference's ``COUNT(DISTINCT *)`` rule, since a
+  multi-column COUNT DISTINCT skips any row holding a NULL
+  (Summary.scala:142-144).
+- Per field value, distinct counts are left-joined onto each
+  ``(study[, donor]) × value`` with a 0 default, instead of a full join
+  and a distinct count over NULL-padded rows (Summary.scala:30-88).
+
+Deliberate divergence (Summary.scala:11-28): the per-donor combinations
+are the donor table's real ``(study, donor)`` pairs in studies with
+files, not all studies × all donors. The donor index left-joins its
+summary on those pairs, so any other combination was built to be dropped.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cqdg_etl_spark.functions.columns import to_boolean
+KEYS = ["study_id", "submitter_donor_id"]
 
 
 def prepare_summary_frames(
     donor: DataFrame, file: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(donor⋈file, distinct studies, study×donor combinations)
-    (reference: Summary.scala:11-28)."""
-    donor_per_file = donor.join(file, ["study_id", "submitter_donor_id"])
+    """(donor⋈file, studies with files, their (study, donor) pairs)."""
+    donor_per_file = donor.join(file, KEYS)
     studies = donor_per_file.select("study_id").distinct()
-    donors = donor.select("submitter_donor_id").distinct()
-    combos = F.broadcast(studies).crossJoin(F.broadcast(donors))
+    combos = donor.select(*KEYS).distinct().join(studies, "study_id", "left_semi")
     return donor_per_file, studies, combos
+
+
+def _by_field(
+    donor_per_file: DataFrame, combos: DataFrame, field: str, counts: dict[str, str]
+) -> DataFrame:
+    """Per combo, nested [{key, <count>...}] over every non-null value of
+    ``field``; each count is a distinct count, 0 where no row matches."""
+    keys = combos.columns
+    domain = donor_per_file.select(field).distinct().filter(F.col(field).isNotNull())
+    observed = donor_per_file.groupBy(*keys, field).agg(
+        *[F.countDistinct(col).alias(name) for name, col in counts.items()]
+    )
+    zeros = [F.coalesce(name, F.lit(0)).alias(name) for name in counts]
+    return (
+        combos.crossJoin(F.broadcast(domain))
+        .join(observed, [*keys, field], "left")
+        .groupBy(*keys)
+        .agg(F.collect_list(F.struct(F.col(field).alias("key"), *zeros)).alias(field))
+    )
 
 
 def donors_and_files_by_field(
     donor_per_file: DataFrame, studies: DataFrame, field: str
 ) -> DataFrame:
-    """Per-study nested [{key, donors, files}] for one field
-    (reference: Summary.scala:30-59)."""
-    domain = donor_per_file.select(field).distinct()
-    combos = F.broadcast(studies).crossJoin(F.broadcast(domain))
-    return (
-        donor_per_file.join(combos, ["study_id", field], "full")
-        .filter(F.col(field).isNotNull())
-        .groupBy("study_id", field)
-        .agg(
-            F.countDistinct("submitter_donor_id").alias("donors"),
-            F.countDistinct("file_name").alias("files"),
-        )
-        .groupBy("study_id")
-        .agg(
-            F.collect_list(
-                F.struct(F.col(field).alias("key"), F.col("donors"), F.col("files"))
-            ).alias(field)
-        )
-    )
+    """Per-study [{key, donors, files}] (reference: Summary.scala:30-59)."""
+    counts = {"donors": "submitter_donor_id", "files": "file_name"}
+    return _by_field(donor_per_file, studies, field, counts)
 
 
 def files_by_field(
-    donor_per_file: DataFrame, study_donor_combos: DataFrame, field: str
+    donor_per_file: DataFrame, combos: DataFrame, field: str
 ) -> DataFrame:
-    """Per-(study, donor) nested [{key, files}]
-    (reference: Summary.scala:61-88)."""
-    domain = donor_per_file.select(field).distinct()
-    combos = study_donor_combos.crossJoin(F.broadcast(domain))
-    return (
-        donor_per_file.join(combos, ["study_id", "submitter_donor_id", field], "full")
-        .filter(F.col(field).isNotNull())
-        .groupBy("study_id", "submitter_donor_id", field)
-        .agg(F.countDistinct("file_name").alias("files"))
-        .groupBy("study_id", "submitter_donor_id")
-        .agg(
-            F.collect_list(F.struct(F.col(field).alias("key"), F.col("files"))).alias(
-                field
-            )
-        )
-    )
+    """Per-(study, donor) [{key, files}] (reference: Summary.scala:61-88)."""
+    return _by_field(donor_per_file, combos, field, {"files": "file_name"})
 
 
 # The 7 clinical frames summarized, in the reference's order
@@ -86,59 +90,52 @@ CLINICAL_FRAMES = [
 ]
 
 
+def _clinical_rows(frames: dict[str, DataFrame]) -> DataFrame:
+    """Union of the 7 frames as (study, donor, key, complete): ``key`` names
+    the frame, ``complete`` is true when the row has no NULL column."""
+
+    def rows(df: DataFrame, name: str) -> DataFrame:
+        complete = reduce(and_, [F.col(c).isNotNull() for c in df.columns])
+        return df.select(*KEYS, F.lit(name).alias("key"), complete.alias("complete"))
+
+    return reduce(DataFrame.union, [rows(frames[k], n) for k, n in CLINICAL_FRAMES])
+
+
 def clinical_data_available(frames: dict[str, DataFrame]) -> DataFrame:
-    """Per-study [{key, donors}] over the 7 clinical frames, merged with
-    chained full-outer joins (reference: Summary.scala:90-131)."""
-    summaries = [
-        frames[k]
+    """Per-study [{key, donors}]: for each clinical frame with rows in the
+    study, its distinct donors (reference: Summary.scala:90-131)."""
+    return (
+        _clinical_rows(frames)
+        .groupBy("study_id", "key")
+        .agg(F.countDistinct("submitter_donor_id").alias("donors"))
         .groupBy("study_id")
         .agg(
-            F.lit(name).alias("key"),
-            F.countDistinct("submitter_donor_id").alias("donors"),
+            F.collect_list(F.struct("key", "donors")).alias("clinical_data_available")
         )
-        for k, name in CLINICAL_FRAMES
-    ]
-    merged = summaries[0]
-    for s in summaries[1:]:
-        merged = merged.join(s, ["study_id", "key", "donors"], "full")
-    return merged.groupBy("study_id").agg(
-        F.collect_list(F.struct("key", "donors")).alias("clinical_data_available")
     )
 
 
 def clinical_data_available_per_donor(
-    study_donor_combos: DataFrame, frames: dict[str, DataFrame]
-) -> tuple[DataFrame, DataFrame]:
-    """Per-(study, donor) [{key, available:boolean}] and the
-    available-only key list (reference: Summary.scala:134-196).
-
-    Availability hinges on COUNT(DISTINCT *) null semantics: rows that
-    exist only from the combos side of the full join carry NULL payload
-    columns, and multi-column COUNT DISTINCT skips any row containing a
-    NULL — so combo-only donors count 0 → toBoolean → false, donors with
-    real clinical rows count ≥1 → true (reference: Summary.scala:142-144).
-    """
-    per_frame = []
-    for k, name in CLINICAL_FRAMES:
-        df = frames[k]
-        per_frame.append(
-            df.join(study_donor_combos, ["study_id", "submitter_donor_id"], "full")
-            .groupBy("study_id", "submitter_donor_id")
-            .agg(
-                F.lit(name).alias("key"),
-                to_boolean(F.expr("count(DISTINCT *)")).alias("available"),
-            )
-        )
-    keys = ["study_id", "submitter_donor_id", "key", "available"]
-    merged = per_frame[0]
-    for s in per_frame[1:]:
-        merged = merged.join(s, keys, "full")
-    available = merged.groupBy("study_id", "submitter_donor_id").agg(
-        F.collect_list(F.struct("key", "available")).alias("clinical_data_available")
+    combos: DataFrame, frames: dict[str, DataFrame]
+) -> DataFrame:
+    """Per-(study, donor) [{key, available}] over the 7 keys, and the
+    available-only [{key}] (reference: Summary.scala:134-196). The
+    reference inner-joins the available-only list into the summary, so a
+    donor with no available key has no row here, hence a null summary."""
+    available = (
+        _clinical_rows(frames)
+        .filter("complete")
+        .groupBy(*KEYS)
+        .agg(F.collect_set("key").alias("keys"))
     )
-    available_only = (
-        merged.filter(F.col("available"))
-        .groupBy("study_id", "submitter_donor_id")
-        .agg(F.collect_list(F.struct("key")).alias("clinical_data_available_only"))
+    flags = [
+        F.struct(F.lit(n).alias("key"), F.array_contains("keys", n).alias("available"))
+        for _, n in CLINICAL_FRAMES
+    ]
+    return combos.join(available, KEYS).select(
+        *KEYS,
+        F.array(*flags).alias("clinical_data_available"),
+        F.transform("keys", lambda k: F.struct(k.alias("key"))).alias(
+            "clinical_data_available_only"
+        ),
     )
-    return available, available_only
