@@ -1,8 +1,8 @@
 """Per-study / per-donor availability summaries
 (reference: indexes/Summary.scala).
 
-Each output is one aggregation over a narrow frame, where the reference
-chains full-outer joins:
+Each output aggregates one narrow frame where the reference chains
+full-outer joins:
 
 - The 7 clinical frames are merged by a union-all. The reference chains
   full-outer joins on ``(study, donor, key, available)`` per donor and

@@ -4,6 +4,11 @@ import os
 
 import pytest
 
+# The session's default driver heap (48g) lets the one JVM the suite shares
+# grow past a small host's memory and be killed mid-run; an explicit
+# SPARK_DRIVER_MEMORY still wins. Subprocess sessions inherit the setting.
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
+
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 SF_MEDIUM = "/root/testdata/sf0.01"
 

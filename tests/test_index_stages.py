@@ -56,6 +56,7 @@ def trees(spark, tmp_path_factory):
 
 
 def submitted_stages(sc, group: str) -> int:
+    # statusTracker is fed by the listener bus; drain it so no job is missed.
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     stages = 0
