@@ -14,8 +14,8 @@ consuming action to hit it. The discipline is therefore:
 - Everything else persists only plan-reachable frames, all through the
   DataFrame API (never bare RDD persists), so ONE standard call —
   ``spark.catalog.clearCache()`` after the consuming action — reclaims
-  every entry. bench.py and the harnesses do exactly that per query;
-  a long-lived session composing operators should too.
+  every entry. The test harnesses do exactly that per query; a
+  long-lived session composing operators should too.
 
 ``tests/test_cache_discipline.py`` pins both halves: a representative
 sweep of persisting operators leaves ZERO persistent RDDs after

@@ -1,10 +1,4 @@
-"""Arrow/BLAS similarity kernels — the batched-matmul scale path.
-
-Kept in their own module (rather than operators/similarity.py) so the
-published JVM-path queries' verification-hash closures
-(tools/verification_state.py hashes every UDF-bearing module a query
-imports) are untouched by kernel additions here.
-"""
+"""Arrow/BLAS similarity kernels — the batched-matmul scale path."""
 
 from __future__ import annotations
 

@@ -1,12 +1,6 @@
 """Graph EVALUATION metrics — modularity of a given labeling and
 multi-source BFS hop distances.
 
-Lives in a NEW module (not ``operators/graph.py``) on the hash-
-stability discipline: editing a published UDF-bearing module stales
-every closure-sharing query's verification hash, so staged batches
-put new kernels beside, not inside, the published ones (the
-``lsh_audit.py`` / ``ann_rerank.py`` precedent).
-
 Scale shapes (100-TB posture):
 - ``modularity`` is two equi-joins (edge ends → labels) + one
   map-side-combinable groupBy over communities; the only non-equi
@@ -167,6 +161,12 @@ def neighbor_jaccard(
 
     Returns (a, b, common, deg_a, deg_b, jaccard) for pairs with
     jaccard ≥ ``min_jaccard``.
+
+    The input contract is not checked. The symmetrized adjacency is not
+    deduplicated, so duplicate pairs or a pair given in both directions
+    give silently WRONG results, not just extra work: inflated degrees
+    and common-neighbor counts, hence wrong Jaccard values. Deduplicate
+    and canonicalize (src < dst) before calling.
     """
     from pyspark import StorageLevel
 

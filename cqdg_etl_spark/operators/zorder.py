@@ -6,10 +6,10 @@ column still scans everything. Z-ordering interleaves the bits of
 several keys into a single sort value, so sorting by it co-locates rows
 that are close in EVERY dimension — parquet min/max footer stats become
 selective for each participating column at once. This is the layout
-trick behind Delta/Iceberg `OPTIMIZE ZORDER BY`, reproduced here with
-nothing but public expressions (shiftleft/shiftright folds inside
-whole-stage codegen — no UDF, no extra shuffle beyond the range
-repartition any sorted write pays).
+trick behind Delta/Iceberg `OPTIMIZE ZORDER BY`. ``zorder_key`` builds
+the sort value from public expressions only (shiftleft/shiftright folds
+inside whole-stage codegen — no UDF, no shuffle of its own); the
+``ops_zorder_orders`` query computes it over orders.
 
 The reference has no storage-layout operators at all (its parquet sink
 is a plain overwrite, processes.scala:21-39); this is a beyond-reference
@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -50,30 +50,3 @@ def zorder_key(cols: Sequence[Column | str], bits: int = 16) -> Column:
                 F.shiftright(cl, i).bitwiseAND(F.lit(1)), i * n + j
             )
     return out
-
-
-def write_zordered_parquet(
-    df: DataFrame,
-    path: str,
-    zorder_by: Sequence[str],
-    bits: int = 16,
-    num_files: int | None = None,
-) -> None:
-    """Write parquet clustered on the Morton curve of ``zorder_by``.
-
-    Range-repartition + sort on the z-value: every output file owns a
-    disjoint z-range, i.e. a compact box in the multi-dimensional key
-    space, so footer min/max stats prune on EACH zorder column
-    (verified by reading row-group footers in tests/test_bucketing.py).
-    The z column is dropped before writing — it is a layout key, not
-    data.
-    """
-    z = df.withColumn("__z", zorder_key(list(zorder_by), bits=bits))
-    parted = (
-        z.repartitionByRange(num_files, "__z")
-        if num_files
-        else z.repartitionByRange("__z")
-    )
-    parted.sortWithinPartitions("__z").drop("__z").write.mode(
-        "overwrite"
-    ).parquet(path)

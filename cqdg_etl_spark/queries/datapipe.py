@@ -75,7 +75,6 @@ def dd_exact_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_ngram_jaccard_pairs",
-    bench=True,
     tags=("datapipe", "dedup"),
     oracle=f"""
         WITH s0 AS (
@@ -196,7 +195,6 @@ def _sql_minhash_verified(
 
 @query(
     "dd_minhash_lsh_candidates",
-    bench=True,
     tags=("datapipe", "dedup", "lsh"),
     oracle=_sql_minhash_lsh(),
 )
@@ -346,7 +344,6 @@ def _sql_banded_cosine_pairs(
 
 @query(
     "dd_embedding_cosine_pairs",
-    bench=True,
     tags=("datapipe", "dedup", "vector"),
     oracle=_sql_banded_cosine_pairs(0.4),
 )
@@ -404,7 +401,6 @@ def dd_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_topk_bruteforce",
-    bench=True,
     tags=("datapipe", "ann"),
     oracle=f"""
         WITH q AS (SELECT vec_id AS query_id, embedding AS qe
@@ -713,7 +709,6 @@ def tx_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_token_counts_by_source",
-    bench=True,
     tags=("datapipe", "text"),
     oracle=f"""
         SELECT source,
@@ -789,7 +784,6 @@ def _sql_winnowing(k: int = 8, window: int = 16) -> str:
 
 @query(
     "tx_winnowing_fingerprints",
-    bench=True,
     tags=("datapipe", "text", "fingerprint"),
     oracle=_sql_winnowing(),
 )
@@ -1134,7 +1128,6 @@ def tx_quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_quality_calibrated_udf",
-    bench=True,
     tags=("datapipe", "text", "pandas-udf"),
     oracle="""
         SELECT lang,
@@ -1297,7 +1290,6 @@ def pf_expect_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_minhash_verified_pairs",
-    bench=True,
     tags=("datapipe", "dedup", "lsh"),
     oracle=_sql_minhash_verified(),
 )

@@ -1,16 +1,13 @@
-"""Round-5 staged queries — NOT yet in the driver registry.
+"""Registry batch 13 (12 queries): exact GEMM top-k, cross-source
+leakage, embedding covariance cells, key-skew profiling, containment
+pairs, an end-to-end curation pipeline, conversion-latency quantiles,
+leave-one-out target encoding, shard assignment, top-k recall
+evaluation, a cluster-safe split and pipe-syntax SQL.
 
-Round 3's verdict froze the published registry until every existing
-name holds a driver-verified correctness row for its current code
-(cleared by the round-4 front-load). These queries are therefore staged:
-same Query objects, same full DuckDB value-hash oracles, locally
-verified by tests/test_datapipe13.py against the same harness — but
-kept out of ``cqdg_etl_spark.queries.REGISTRY`` (and hence out of
-``__spark_entry__.queries()``) so the driver surface does not grow
-ahead of its verification budget.
-
-To publish (round 5): call ``register()`` from queries/__init__.py and
-bump EXPECTED_REGISTRY_SIZE by ``len(STAGED)``.
+Registered through ``registry.query`` like every query module. Each
+query carries a full DuckDB value-hash oracle; tests/test_correctness.py
+checks it and tests/test_datapipe13.py (nightly lane) adds kernel-level
+behavioral tests.
 """
 
 from __future__ import annotations
@@ -18,29 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cqdg_etl_spark.queries.registry import REGISTRY, Query, load
+from cqdg_etl_spark.queries.registry import load, query
 from cqdg_etl_spark.queries.datapipe import _sql_minhash_verified, _sql_shingles
 
-STAGED: dict[str, Query] = {}
 
-
-def _staged(name: str, oracle: str | None = None, bench: bool = False,
-            tags: tuple[str, ...] = ()):
-    def deco(fn):
-        STAGED[name] = Query(name, fn, oracle, fn.__doc__ or "", bench, tags)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """Publish the staged queries into the driver registry (round 5)."""
-    REGISTRY.update(STAGED)
-
-
-@_staged(
+@query(
     "ann_topk_gemm",
-    bench=True,  # headline entry once published (round 5)
     tags=("datapipe", "ann", "gemm"),
     oracle="""
         WITH q AS (SELECT vec_id AS query_id, embedding AS qe
@@ -78,7 +58,7 @@ def ann_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "dd_cross_source_leakage",
     tags=("datapipe", "dedup", "contamination"),
     oracle=f"""
@@ -127,7 +107,7 @@ def dd_cross_source_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "emb_covariance_cells",
     tags=("datapipe", "embedding", "covariance"),
     oracle="""
@@ -163,7 +143,7 @@ def emb_covariance_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return covariance_cells(emb, "embedding")
 
 
-@_staged(
+@query(
     "pf_key_skew_profile",
     tags=("datapipe", "profile", "skew"),
     oracle="""
@@ -203,7 +183,7 @@ def pf_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return key_skew_profile(load(spark, sf_dir, "orders"), "o_custkey")
 
 
-@_staged(
+@query(
     "dd_containment_pairs",
     tags=("datapipe", "dedup", "containment"),
     oracle=f"""
@@ -361,9 +341,8 @@ def _sql_curation_e2e() -> str:
     """
 
 
-@_staged(
+@query(
     "pipe_corpus_curation_e2e",
-    bench=True,  # headline entry once published (round 5)
     tags=("datapipe", "pipeline", "dedup", "quality"),
     oracle=_sql_curation_e2e(),
 )
@@ -429,7 +408,7 @@ def pipe_corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "ev_conversion_latency_quantiles",
     tags=("datapipe", "events", "percentile"),
     oracle="""
@@ -485,7 +464,7 @@ def ev_conversion_latency_quantiles(
     )
 
 
-@_staged(
+@query(
     "fe_target_encoding_loo",
     tags=("datapipe", "features", "encoding"),
     oracle="""
@@ -536,7 +515,7 @@ def fe_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "ds_shard_assignment",
     tags=("datapipe", "sampling", "sharding"),
     oracle="""
@@ -610,7 +589,7 @@ def _sql_recall_eval() -> str:
     """
 
 
-@_staged(
+@query(
     "emb_topk_recall_eval",
     tags=("datapipe", "ann", "evaluation"),
     oracle=_sql_recall_eval(),
@@ -646,7 +625,7 @@ def emb_topk_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "ds_cluster_safe_split",
     tags=("datapipe", "sampling", "dedup", "leakage"),
     oracle=f"""
@@ -714,7 +693,7 @@ def ds_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "cluster", "split")
 
 
-@_staged(
+@query(
     "sql_pipe_syntax_orders",
     tags=("sql-surface", "spark4", "pipe"),
     oracle="""

@@ -1,11 +1,8 @@
-"""Round-5-staged queries, PUBLISHED round 6 (registry 194 → 204).
+"""Registry batch 14 (10 queries), registered through ``registry.query``.
 
-Same staging discipline as datapipe13 (staged r4 → published r5): full
-Query objects with DuckDB value-hash oracles, locally verified by
-tests/test_datapipe14.py at sf0.001/sf0.01 while staged, registered
-into ``cqdg_etl_spark.queries.REGISTRY`` by queries/__init__.py once
-the round-6 driver window had room for their first rows (_FRONT
-positions 4–13).
+Each query carries a full DuckDB value-hash oracle, checked by
+tests/test_correctness.py; tests/test_datapipe14.py (nightly lane) adds
+adversarial fixtures run through both engines.
 
 Batch theme: the evaluation-and-curation layer a training-data
 pipeline runs AROUND the operators that already exist — measured
@@ -27,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cqdg_etl_spark.queries.registry import REGISTRY, Query, load
+from cqdg_etl_spark.queries.registry import REGISTRY, load, query
 from cqdg_etl_spark.queries.datapipe import (
     SQL_NORM,
     SQL_TOKS,
@@ -35,31 +32,14 @@ from cqdg_etl_spark.queries.datapipe import (
     _sql_shingles,
 )
 
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, oracle: str | None = None, bench: bool = False,
-            tags: tuple[str, ...] = ()):
-    def deco(fn):
-        STAGED[name] = Query(name, fn, oracle, fn.__doc__ or "", bench, tags)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """Publish the staged queries into the driver registry (round 6)."""
-    REGISTRY.update(STAGED)
-
 
 # ------------------------------------------------ paragraph-level dedup
 
 _PARA_TOKENS = 10  # tokens per pseudo-paragraph (corpus has no \n\n)
 
 
-@_staged(
+@query(
     "dd_paragraph_dedup",
-    bench=True,
     tags=("datapipe", "dedup", "paragraph"),
     oracle=f"""
         WITH toks AS (
@@ -216,7 +196,7 @@ def _sql_ngram_truth(threshold: float) -> str:
         )"""
 
 
-@_staged(
+@query(
     "dd_lsh_recall_eval",
     tags=("datapipe", "dedup", "eval"),
     oracle=f"""
@@ -280,7 +260,7 @@ def dd_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BATCH_BUDGET = 4096  # tokens per training batch
 
 
-@_staged(
+@query(
     "ds_length_buckets",
     tags=("datapipe", "dataset", "batching"),
     oracle=f"""
@@ -363,7 +343,7 @@ def ds_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------- language-ID confusion matrix
 
 
-@_staged(
+@query(
     "tx_langid_eval_confusion",
     tags=("datapipe", "text", "eval"),
     oracle=None,  # set below — wraps the published tx_language_id oracle
@@ -405,7 +385,7 @@ def tx_langid_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Compose the published language-ID oracle rather than duplicating its
 # stopword tables: REGISTRY is populated by the datapipe import above.
-STAGED["tx_langid_eval_confusion"].oracle = f"""
+REGISTRY["tx_langid_eval_confusion"].oracle = f"""
     WITH pred AS ({REGISTRY['tx_language_id'].oracle}),
     cells AS (
       SELECT d.lang AS true_lang, p.pred_lang, count(*) AS n
@@ -452,13 +432,12 @@ _MP4_SCHEMA = T.StructType([
 ])
 
 
-@_staged(
+@query(
     "mm_mp4_demux_stats",
-    # bench sanity (VERDICT r5 #6): 0.94-1.2 s at sf0.1, and the
-    # executed plan is ONE MapInPandas directly over the parquet scan —
-    # no shuffle, no driver round-trip, so the Arrow batch path keeps
-    # the synthetic-MP4 build + demux strictly per-partition.
-    bench=True,
+    # 0.94-1.2 s at sf0.1, and the executed plan is ONE MapInPandas
+    # directly over the parquet scan — no shuffle, no driver round-trip,
+    # so the Arrow batch path keeps the synthetic-MP4 build + demux
+    # strictly per-partition.
     tags=("datapipe", "multimodal", "mp4"),
     oracle=f"""
         WITH d AS (
@@ -548,7 +527,7 @@ def mm_mp4_demux_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- EWMA smoothing state
 
-@_staged(
+@query(
     "ev_ewma_smoothed",
     tags=("events", "stateful", "drift"),
     oracle="""
@@ -650,7 +629,7 @@ def ev_ewma_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------ water-filling budget split
 
 
-@_staged(
+@query(
     "ds_waterfill_budget",
     tags=("datapipe", "dataset", "budget"),
     oracle=f"""
@@ -801,7 +780,7 @@ def _sql_kcore(k: int, rounds: int) -> str:
     """
 
 
-@_staged(
+@query(
     "graph_kcore_peel",
     tags=("graph", "kcore", "iterative"),
     oracle=_sql_kcore(_KCORE_K, _KCORE_ROUNDS),
@@ -850,7 +829,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------- Spark 4 SQL surface: GROUP BY ALL etc.
 
 
-@_staged(
+@query(
     "sql_group_by_all_lateral",
     tags=("sql", "group-by-all", "lateral-alias"),
     oracle="""
@@ -899,7 +878,7 @@ def sql_group_by_all_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------- per-dimension embedding variance
 
 
-@_staged(
+@query(
     "emb_dim_variance_topk",
     tags=("datapipe", "embedding", "profile"),
     oracle="""

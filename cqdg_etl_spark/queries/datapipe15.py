@@ -1,11 +1,8 @@
-"""Round-7 publication (staged in round 6, published round 7).
+"""Registry batch 15 (12 queries), registered through ``registry.query``.
 
-Same staging discipline as datapipe13 (staged r4 → published r5) and
-datapipe14 (staged r5 → published r6): full Query objects with DuckDB
-value-hash oracles, locally verified by tests/test_datapipe15.py at
-sf0.001/sf0.01 + adversarial fixtures while staged, then flipped into
-``cqdg_etl_spark.queries.REGISTRY`` via ``register()`` with the 12
-names front-loaded in the round-7 driver window.
+Each query carries a full DuckDB value-hash oracle, checked by
+tests/test_correctness.py; tests/test_datapipe15.py (nightly lane) adds
+adversarial fixtures run through both engines.
 
 Batch theme: corpus-forensics and assignment primitives that round out
 the curation layer — truncation-prefix dedup (the duplicate class
@@ -25,24 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cqdg_etl_spark.queries.registry import REGISTRY, Query, load
+from cqdg_etl_spark.queries.registry import load, query
 from cqdg_etl_spark.queries.datapipe import SQL_NORM, SQL_TOKS, _sql_shingles
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, oracle: str | None = None, bench: bool = False,
-            tags: tuple[str, ...] = ()):
-    def deco(fn):
-        STAGED[name] = Query(name, fn, oracle, fn.__doc__ or "", bench, tags)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """Publish the staged queries into the driver registry (round 7)."""
-    REGISTRY.update(STAGED)
 
 
 # -------------------------------------------- truncation-prefix dedup
@@ -50,7 +31,7 @@ def register() -> None:
 _PFX_K = 12
 
 
-@_staged(
+@query(
     "dd_truncation_prefix_pairs",
     tags=("datapipe", "dedup", "truncation"),
     oracle=f"""
@@ -95,7 +76,7 @@ def dd_truncation_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- syllable complexity audit
 
 
-@_staged(
+@query(
     "tx_syllable_complexity",
     tags=("datapipe", "text", "quality"),
     oracle=f"""
@@ -183,7 +164,7 @@ def tx_syllable_complexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------- shingle novelty curve
 
 
-@_staged(
+@query(
     "tx_shingle_novelty",
     tags=("datapipe", "text", "curation"),
     oracle=f"""
@@ -249,7 +230,7 @@ def tx_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------- seasonal-baseline outliers
 
 
-@_staged(
+@query(
     "ev_seasonal_outliers",
     tags=("datapipe", "events", "anomaly"),
     oracle="""
@@ -335,7 +316,7 @@ def ev_seasonal_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KFOLD = 5
 
 
-@_staged(
+@query(
     "ds_stratified_kfold",
     tags=("datapipe", "sampling", "cv"),
     oracle=f"""
@@ -382,7 +363,7 @@ def ds_stratified_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ES_K = 100
 
 
-@_staged(
+@query(
     "ds_weighted_sample_wor",
     tags=("datapipe", "sampling", "weighted"),
     oracle=f"""
@@ -444,7 +425,7 @@ def ds_weighted_sample_wor(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RDV_K = 16  # shards before; rebalance adds one → k+1
 
 
-@_staged(
+@query(
     "ds_rendezvous_rebalance",
     tags=("datapipe", "sharding", "consistent-hash"),
     oracle=f"""
@@ -582,7 +563,7 @@ def _sql_personalized_pagerank(
     """
 
 
-@_staged(
+@query(
     "graph_personalized_pagerank",
     tags=("graph", "pagerank", "iterative"),
     oracle=_sql_personalized_pagerank(),
@@ -659,9 +640,8 @@ def _sql_lsh_param_audit() -> str:
     return " UNION ALL ".join(arms)
 
 
-@_staged(
+@query(
     "dd_lsh_param_audit",
-    bench=True,  # VERDICT r6 #1: one signature pass, three measured layouts
     tags=("datapipe", "dedup", "lsh", "audit"),
     oracle=_sql_lsh_param_audit(),
 )
@@ -695,7 +675,7 @@ def dd_lsh_param_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PRETOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 
-@_staged(
+@query(
     "tx_bpe_pretoken_stats",
     tags=("datapipe", "text", "tokenizer"),
     oracle=f"""
@@ -780,7 +760,7 @@ def tx_bpe_pretoken_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FUNNEL_WINDOW = "INTERVAL 7 DAY"  # per-step completion window
 
 
-@_staged(
+@query(
     "ev_strict_funnel_3step",
     tags=("datapipe", "events", "funnel"),
     oracle=f"""
@@ -862,7 +842,7 @@ def ev_strict_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ intra-class dispersion
 
-@_staged(
+@query(
     "emb_intra_class_dispersion",
     tags=("datapipe", "vectors", "quality"),
     oracle="""

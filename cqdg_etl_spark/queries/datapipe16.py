@@ -1,10 +1,8 @@
-"""Round-8 publication (staged in round 6, published round 8).
+"""Registry batch 16 (5 queries), registered through ``registry.query``.
 
-Same staging discipline as datapipe13→15: full Query objects with
-DuckDB value-hash oracles, locally verified by tests/test_datapipe16.py
-at sf0.001/sf0.01 BEFORE publication; ``register()`` is called from
-``queries/__init__.py`` (round 8) and the five names are front-loaded
-in the driver window for their first correctness rows.
+Each query carries a full DuckDB value-hash oracle, checked by
+tests/test_correctness.py; tests/test_datapipe16.py (nightly lane) adds
+adversarial fixtures run through both engines.
 
 Batch theme: closing the loop on the engine's approximate structures —
 the production ANN serving shape (IVF coarse pruning → PQ-ADC code
@@ -33,27 +31,11 @@ from cqdg_etl_spark.queries.datapipe import (
     _sql_minhash_ctes,
     _sql_shingles,
 )
-from cqdg_etl_spark.queries.registry import REGISTRY, Query, load
+from cqdg_etl_spark.queries.registry import load, query
 
 _SQL_SHINGLES = _sql_shingles("text")
 _SQL_TOKS_DOC = SQL_TOKS.format(c="text")
 _SQL_NORM_DOC = SQL_NORM.format(c="text")
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, oracle: str | None = None, bench: bool = False,
-            tags: tuple[str, ...] = ()):
-    def deco(fn):
-        STAGED[name] = Query(name, fn, oracle, fn.__doc__ or "", bench, tags)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """Publish the staged queries into the driver registry (round 8)."""
-    REGISTRY.update(STAGED)
 
 
 # -------------------------------------------- IVF + PQ-ADC + exact rerank
@@ -216,14 +198,11 @@ def _sql_ivf_pq_rerank() -> str:
     """
 
 
-@_staged(
+@query(
     "ann_topk_ivf_pq_rerank",
     # VERDICT r6 #6 sanity measurement (round 7, sf0.1): 4.9 s/run,
     # ONE hash exchange (the final per-query top-k resolution) + 3
     # broadcasts, zero BNLJ/cartesian — shuffle-bounded as composed.
-    # bench=True so publication puts the serving pipeline under the
-    # per-round timing gate.
-    bench=True,
     tags=("datapipe", "ann", "ivf", "pq", "rerank"),
     oracle=_sql_ivf_pq_rerank(),
 )
@@ -318,7 +297,7 @@ def _sql_minhash_calibration() -> str:
     """
 
 
-@_staged(
+@query(
     "dd_minhash_calibration",
     tags=("datapipe", "dedup", "lsh", "audit"),
     oracle=_sql_minhash_calibration(),
@@ -403,7 +382,7 @@ def dd_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------- dup-cluster size profile
 
 
-@_staged(
+@query(
     "dd_dup_cluster_size_profile",
     tags=("datapipe", "dedup", "graph", "profile"),
     oracle=f"""
@@ -477,7 +456,7 @@ def dd_dup_cluster_size_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------- robust outlier profile
 
 
-@_staged(
+@query(
     "pf_robust_zscore_event_value",
     tags=("datapipe", "profile", "quality", "events"),
     oracle="""
@@ -605,7 +584,7 @@ def pf_robust_zscore_event_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------- Jensen-Shannon matrix
 
 
-@_staged(
+@query(
     "tx_source_js_divergence",
     tags=("datapipe", "text", "composition"),
     oracle=f"""

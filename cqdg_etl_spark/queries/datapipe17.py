@@ -1,15 +1,8 @@
-"""Round-9 staged queries — NOT yet in the driver registry.
+"""Registry batch 17 (9 queries), registered through ``registry.query``.
 
-Same staging discipline as datapipe13→16: full Query objects with
-DuckDB value-hash oracles, locally verified by tests/test_datapipe17.py
-at sf0.001/sf0.01 + adversarial fixtures, kept out of
-``cqdg_etl_spark.queries.REGISTRY`` so the published surface never
-carries a name without a driver row. The round-8 window belongs to the
-datapipe16 publication + the backlog-clearing SLA; these wait their
-turn by design.
-
-To publish (round 9): call ``register()`` from queries/__init__.py and
-bump EXPECTED_REGISTRY_SIZE by ``len(STAGED)``.
+Each query carries a full DuckDB value-hash oracle, checked by
+tests/test_correctness.py; tests/test_datapipe17.py (nightly lane) adds
+adversarial fixtures run through both engines.
 
 Batch theme: the curation signals a training-data pipeline reads
 BETWEEN the dedup and sampling passes — per-source character-entropy
@@ -33,25 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cqdg_etl_spark.queries.datapipe import SQL_NORM
-from cqdg_etl_spark.queries.registry import REGISTRY, Query, load
+from cqdg_etl_spark.queries.registry import load, query
 
 _SQL_NORM_DOC = SQL_NORM.format(c="text")
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, oracle: str | None = None, bench: bool = False,
-            tags: tuple[str, ...] = ()):
-    def deco(fn):
-        STAGED[name] = Query(name, fn, oracle, fn.__doc__ or "", bench, tags)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """Publish the staged queries into the driver registry (round 9)."""
-    REGISTRY.update(STAGED)
 
 
 def _q6(col):
@@ -73,9 +50,8 @@ _LN2 = repr(math.log(2.0))
 _ENT_LOW = 3.5  # bits; English prose runs ~4.0-4.2, repeated junk <3
 
 
-@_staged(
+@query(
     "tx_char_entropy_quality",
-    bench=True,
     tags=("datapipe", "text", "quality"),
     oracle=f"""
         WITH d AS (
@@ -192,7 +168,7 @@ _KM_CENSOR_DAYS = 7  # observation window tail: users last seen within
 #                      this many days of corpus end are censored
 
 
-@_staged(
+@query(
     "ev_survival_km",
     tags=("datapipe", "events", "survival"),
     oracle=f"""
@@ -317,7 +293,7 @@ def ev_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------ curriculum interleave ordering
 
 
-@_staged(
+@query(
     "ds_curriculum_interleave",
     tags=("datapipe", "sampling", "ordering"),
     oracle="""
@@ -453,13 +429,11 @@ def _sql_hits() -> str:
     """
 
 
-@_staged(
-    # NOT bench-flagged: bench.py times the final action only, and an
-    # iterative query does its real work in per-round localCheckpoint
-    # actions inside fn() — the timed write would read the 10-row
-    # checkpointed result (0.06 s measured) and publish a misleading
-    # headline. tools/scale_probe.py times fresh build+write and is
-    # the honest harness for iterative ops.
+@query(
+    # Iterative: the real work happens in per-round localCheckpoint
+    # actions inside fn(), so timing only the final action reads the
+    # 10-row checkpointed result (0.06 s measured). Time fresh
+    # build+write instead.
     "graph_hits_scores",
     tags=("graph", "hits", "iterative"),
     oracle=_sql_hits(),
@@ -531,8 +505,8 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The final h is localCheckpointed (lineage cut), so the bipartite
     # edge frame is no longer reachable from the returned plan — drop
     # it here rather than leaking a cached frame into the session
-    # (ADVICE r7 #3; bench.py's clearCache masked it, other harnesses
-    # running many queries per session would not).
+    # (ADVICE r7 #3; a harness running many queries per session would
+    # otherwise accumulate it).
     e.unpersist()
     return (
         h.orderBy(F.col("s").desc(), F.col("user_id"))
@@ -547,9 +521,8 @@ _CC_GAP_US = 30 * 60 * 1_000_000  # the events.py sessionization gap
 _CC_TOPK = 10
 
 
-@_staged(
+@query(
     "ev_peak_concurrency",
-    bench=True,
     tags=("datapipe", "events", "session"),
     oracle=f"""
         WITH flagged AS (
@@ -679,7 +652,7 @@ def ev_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------- bipartite type-affinity projection
 
 
-@_staged(
+@query(
     "graph_type_affinity",
     tags=("graph", "bipartite", "projection"),
     oracle=f"""
@@ -761,7 +734,7 @@ def graph_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VG_DECILES = 10
 
 
-@_staged(
+@query(
     "tx_vocab_growth_curve",
     tags=("datapipe", "text", "vocabulary"),
     oracle=f"""
@@ -913,7 +886,7 @@ def tx_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------ DAU/WAU engagement stickiness
 
 
-@_staged(
+@query(
     "ev_dau_wau_stickiness",
     tags=("datapipe", "events", "engagement"),
     oracle=f"""
@@ -991,7 +964,7 @@ def ev_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RS_TARGET = 3.0  # expected copies for the longest document
 
 
-@_staged(
+@query(
     "ds_stochastic_round_resample",
     tags=("datapipe", "sampling", "resample"),
     oracle=f"""

@@ -1,12 +1,10 @@
-"""Round-10 published queries (staged in round 9).
+"""Registry batch 18 (8 queries), registered through ``registry.query``.
 
-Same staging discipline as datapipe13→17: full Query objects with
-DuckDB value-hash oracles, locally verified by tests/test_datapipe18.py
-at sf0.001/sf0.01 + adversarial fixtures while staged, published into
-``cqdg_etl_spark.queries.REGISTRY`` in round 10 with the reviewed
-_BNLJ_OK / _GLOBAL_WINDOW_OK entries copied into the fleet lint
-(tests/test_plan_lint.py enforces the copy mechanically). The BFS x20
-scale gate was cleared in SCALE_PROBE_r09 before publication.
+Each query carries a full DuckDB value-hash oracle, checked by
+tests/test_correctness.py; tests/test_datapipe18.py (nightly lane) adds
+adversarial fixtures run through both engines. Their reviewed plan-shape
+exceptions live in tests/test_plan_lint.py. The BFS x20 scale gate is
+recorded in SCALE_PROBE_r09.
 
 Batch theme: the EVALUATION layer of a training-data pipeline — the
 metrics that judge what the dedup/sampling/retrieval passes produced.
@@ -35,23 +33,7 @@ from pyspark.sql import functions as F
 
 from cqdg_etl_spark.queries.datapipe import SQL_TOKS
 from cqdg_etl_spark.queries.datapipe4 import _BM25_Q, _sql_bm25
-from cqdg_etl_spark.queries.registry import REGISTRY, Query, load
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, oracle: str | None = None, bench: bool = False,
-            tags: tuple[str, ...] = ()):
-    def deco(fn):
-        STAGED[name] = Query(name, fn, oracle, fn.__doc__ or "", bench, tags)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """Publish the staged queries into the driver registry (round 10)."""
-    REGISTRY.update(STAGED)
+from cqdg_etl_spark.queries.registry import load, query
 
 
 def _q6(col):
@@ -71,7 +53,7 @@ _SQL_Q6 = "floor(({x}) * 1000000.0 + 0.5) / 1000000.0"
 # ------------------------------------ WOE / information value
 
 
-@_staged(
+@query(
     "fe_woe_information_value",
     tags=("datapipe", "features", "encoding"),
     oracle=f"""
@@ -145,7 +127,7 @@ def fe_woe_information_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------ CUSUM changepoint
 
 
-@_staged(
+@query(
     "ev_changepoint_cusum",
     tags=("datapipe", "events", "drift"),
     oracle=f"""
@@ -283,7 +265,7 @@ def _coparts_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "graph_modularity_brands",
     tags=("datapipe", "graph", "modularity"),
     oracle=f"""
@@ -392,7 +374,7 @@ def _sql_bfs(max_hops: int, n_sources: int) -> str:
     """
 
 
-@_staged(
+@query(
     "graph_bfs_hops",
     tags=("datapipe", "graph", "bfs", "iterative"),
     oracle=_sql_bfs(_BFS_HOPS, _BFS_SOURCES),
@@ -512,7 +494,7 @@ def _sql_ndcg() -> str:
     """
 
 
-@_staged(
+@query(
     "ret_ndcg_eval",
     tags=("datapipe", "retrieval", "eval"),
     oracle=_sql_ndcg(),
@@ -662,7 +644,7 @@ _MI_HOUR = "CAST(extract(hour FROM ts) AS INT)"
 _MI_VBUCKET = "CAST(least(9, CAST(floor(value / 25.0) AS BIGINT)) AS INT)"
 
 
-@_staged(
+@query(
     "pf_column_mutual_information",
     tags=("datapipe", "profile", "dependence"),
     oracle=(
@@ -729,9 +711,8 @@ def pf_column_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ATTR_WINDOW_DAYS = 7
 
 
-@_staged(
+@query(
     "ev_attribution_linear",
-    bench=True,
     tags=("datapipe", "events", "attribution"),
     oracle=f"""
         WITH p AS (
@@ -894,9 +875,8 @@ def _sql_dhash() -> str:
     """
 
 
-@_staged(
+@query(
     "mm_image_dhash_index",
-    bench=True,
     tags=("datapipe", "multimodal", "dedup"),
     oracle=_sql_dhash(),
 )

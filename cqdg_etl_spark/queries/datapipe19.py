@@ -1,16 +1,9 @@
-"""Round-11 staged queries — NOT yet in the driver registry.
+"""Registry batch 19 (8 queries), registered through ``registry.query``.
 
-Same staging discipline as datapipe13→18: full Query objects with
-DuckDB value-hash oracles, locally verified by tests/test_datapipe19.py
-at sf0.001/sf0.01 + adversarial fixtures, kept out of
-``cqdg_etl_spark.queries.REGISTRY`` so the published surface never
-carries a name without a driver row. Rounds 9 and 10 belong to the
-datapipe17/18 publications; these wait their turn by design.
-
-To publish (round 11): call ``register()`` from queries/__init__.py,
-bump EXPECTED_REGISTRY_SIZE by ``len(STAGED)``, and copy the reviewed
-exception entries from tests/test_datapipe19.py::_BNLJ_OK into the
-fleet lint (the orphan test enforces the copy).
+Each query carries a full DuckDB value-hash oracle, checked by
+tests/test_correctness.py; tests/test_datapipe19.py (nightly lane) adds
+adversarial fixtures run through both engines. Their reviewed plan-shape
+exceptions live in tests/test_plan_lint.py.
 
 Batch theme: second-order signals — what the FIRST round of metrics
 missed. Matryoshka truncation evaluation (how much recall do the
@@ -34,23 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from cqdg_etl_spark.queries.datapipe import SQL_TOKS, _sql_cos
-from cqdg_etl_spark.queries.registry import REGISTRY, Query, load
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, oracle: str | None = None, bench: bool = False,
-            tags: tuple[str, ...] = ()):
-    def deco(fn):
-        STAGED[name] = Query(name, fn, oracle, fn.__doc__ or "", bench, tags)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """Publish the staged queries into the driver registry (round 11)."""
-    REGISTRY.update(STAGED)
+from cqdg_etl_spark.queries.registry import load, query
 
 
 def _q6(col):
@@ -108,7 +85,7 @@ def _sql_matryoshka() -> str:
     """
 
 
-@_staged(
+@query(
     "emb_matryoshka_recall",
     tags=("datapipe", "embeddings", "eval"),
     oracle=_sql_matryoshka(),
@@ -222,7 +199,7 @@ def _sql_markov_stationary(iters: int = _MKV_ITERS) -> str:
     """
 
 
-@_staged(
+@query(
     "ev_markov_stationary",
     tags=("datapipe", "events", "markov", "iterative"),
     oracle=_sql_markov_stationary(),
@@ -319,7 +296,7 @@ def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------ Gini concentration
 
 
-@_staged(
+@query(
     "ev_user_gini",
     tags=("datapipe", "events", "profile"),
     oracle=f"""
@@ -438,7 +415,7 @@ def _sql_autocorr() -> str:
     """
 
 
-@_staged(
+@query(
     "pf_autocorr_daily",
     tags=("datapipe", "profile", "timeseries"),
     oracle=_sql_autocorr(),
@@ -571,7 +548,7 @@ def _sql_rake() -> str:
     """
 
 
-@_staged(
+@query(
     "tx_rake_keywords",
     tags=("datapipe", "text", "keywords"),
     oracle=_sql_rake(),
@@ -677,7 +654,7 @@ _SQL_COPARTS = """
         )"""
 
 
-@_staged(
+@query(
     "graph_neighbor_jaccard",
     tags=("datapipe", "graph", "linkpred"),
     oracle=f"""
@@ -800,7 +777,7 @@ def _sql_fk() -> str:
     return " UNION ALL ".join(arms) + " ORDER BY relation"
 
 
-@_staged(
+@query(
     "pf_fk_candidate_audit",
     tags=("datapipe", "profile", "schema"),
     oracle=_sql_fk(),
@@ -856,7 +833,7 @@ def pf_fk_candidate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------ Poisson burst days
 
 
-@_staged(
+@query(
     "ev_poisson_burst_days",
     tags=("datapipe", "events", "anomaly"),
     oracle=f"""

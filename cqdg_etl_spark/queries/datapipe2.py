@@ -30,7 +30,6 @@ def _sql_multiset_shingles(c: str, n: int) -> str:
 
 @query(
     "tx_repetition_metrics",
-    bench=True,
     tags=("datapipe", "text", "quality"),
     oracle=f"""
         WITH toks AS (
@@ -307,7 +306,6 @@ def pf_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "emb_label_centroids",
-    bench=True,
     tags=("datapipe", "vectors"),
     oracle="""
         WITH pos AS (

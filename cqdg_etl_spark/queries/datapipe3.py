@@ -91,7 +91,6 @@ def _sql_semantic_prune(
 
 @query(
     "dd_semantic_prune",
-    bench=True,
     tags=("datapipe", "dedup", "vector", "semdedup"),
     oracle=_sql_semantic_prune(_SEM_TAU),
 )
@@ -193,7 +192,6 @@ def ds_mixture_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_bigram_lm_score",
-    bench=True,
     tags=("datapipe", "text", "lm", "quality"),
     oracle=f"""
         WITH toks AS (
@@ -280,7 +278,6 @@ _SPAN_W = 8
 
 @query(
     "dd_span_dedup",
-    bench=True,
     tags=("datapipe", "dedup", "span"),
     oracle=f"""
         WITH t AS (

@@ -128,7 +128,6 @@ _TFIDF_MAX_DF = 1000
 
 @query(
     "dd_tfidf_cosine_pairs",
-    bench=True,
     tags=("datapipe", "dedup", "tfidf", "similarity"),
     oracle=f"""
         WITH tf AS (
@@ -756,7 +755,6 @@ def _sql_ppjoin(t_num: int = 4, t_den: int = 5) -> str:
 
 @query(
     "dd_ppjoin_pairs",
-    bench=True,
     tags=("datapipe", "dedup", "ppjoin", "prefix-filter"),
     oracle=_sql_ppjoin(),
 )

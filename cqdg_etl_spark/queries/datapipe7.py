@@ -133,7 +133,6 @@ _VOCAB_K = 100
 
 @query(
     "tx_vocab_coverage",
-    bench=True,
     tags=("datapipe", "text", "tokenizer"),
     oracle=f"""
         WITH d AS (

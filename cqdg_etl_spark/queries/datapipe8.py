@@ -67,7 +67,6 @@ _BUDGET_FRAC = 0.3
 
 @query(
     "ds_quality_budget_select",
-    bench=True,
     tags=("datapipe", "sampling", "selection"),
     oracle=f"""
         WITH d AS (

@@ -17,7 +17,6 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min in microseconds
 
 @query(
     "ev_tumbling_hourly",
-    bench=True,
     tags=("events", "window-agg"),
     oracle="""
         SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
@@ -238,7 +237,6 @@ def ev_moving_avg_3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_weekly_retention",
-    bench=True,
     tags=("events", "cohort", "join", "agg"),
     oracle="""
         WITH uw AS (

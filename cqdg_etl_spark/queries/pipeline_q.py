@@ -145,7 +145,6 @@ def pipe_clinical_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipe_customer_document",
-    bench=True,
     tags=("pipeline", "nest", "join", "agg"),
     oracle="""
         WITH order_rev AS (

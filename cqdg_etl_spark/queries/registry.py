@@ -3,8 +3,8 @@
 Every implemented operator from SURVEY.md §2 (and every training-data
 operator) is exposed as a named query: a callable ``(spark, sf_dir) ->
 DataFrame`` plus, where SQL-expressible, an equivalent ANSI-SQL oracle
-string for DuckDB. ``__spark_entry__.py`` publishes the registry to the
-correctness driver; ``bench.py`` times the headline subset.
+string for DuckDB. Every query module registers through ``query``;
+``__spark_entry__.py`` publishes the registry to the correctness driver.
 
 Comparison contract (driver): row-count + schema + order-insensitive
 value hash with columns sorted by name. Consequences for query authors:
@@ -29,7 +29,6 @@ class Query:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None
     doc: str = ""
-    bench: bool = False  # include in bench.py headline timing
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
@@ -40,13 +39,12 @@ def query(
     name: str,
     oracle: str | None = None,
     doc: str = "",
-    bench: bool = False,
     tags: tuple[str, ...] = (),
 ):
     """Decorator registering a query implementation."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = Query(name, fn, oracle, doc or (fn.__doc__ or ""), bench, tags)
+        REGISTRY[name] = Query(name, fn, oracle, doc or (fn.__doc__ or ""), tags)
         return fn
 
     return deco

@@ -63,7 +63,6 @@ def _snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "etl_scd2_customer_merge",
-    bench=True,
     tags=("etl", "scd", "join"),
     oracle=f"""
         WITH cur_open AS (

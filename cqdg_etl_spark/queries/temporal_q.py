@@ -16,7 +16,6 @@ from cqdg_etl_spark.queries.registry import load, query
 
 @query(
     "ev_asof_purchase_view",
-    bench=True,
     tags=("events", "asof", "window"),
     oracle="""
         WITH v AS (

@@ -22,7 +22,6 @@ from cqdg_etl_spark.queries.registry import dec_avg, dec_sum, load, query
 
 @query(
     "q1_pricing_summary",
-    bench=True,
     tags=("tpch", "agg"),
     oracle="""
         SELECT l_returnflag, l_linestatus,
@@ -64,7 +63,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q3_shipping_priority",
-    bench=True,
     tags=("tpch", "join", "topk"),
     oracle="""
         SELECT o_orderkey,
@@ -113,7 +111,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q5_local_supplier_volume",
-    bench=True,
     tags=("tpch", "join"),
     oracle="""
         SELECT n_name,
@@ -163,7 +160,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q6_forecast_revenue",
-    bench=True,
     tags=("tpch", "filter"),
     oracle="""
         SELECT CAST(round(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
@@ -195,7 +191,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q10_returned_items",
-    bench=True,
     tags=("tpch", "join", "topk"),
     oracle="""
         SELECT c_custkey, c_name,

@@ -110,7 +110,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q9_profit_by_nation_year",
-    bench=True,
     tags=("tpch", "join", "agg"),
     oracle="""
         SELECT n_name, CAST(year(o_orderdate) AS INT) AS o_year,

@@ -13,9 +13,9 @@ SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 SF_MEDIUM = "/root/testdata/sf0.01"
 
 # Driver-lane split (see pytest.ini): the datapipe modules hold the
-# operator-internal adversarial/edge-case fixtures and the staged oracle
-# re-runs whose query-level behavior test_correctness already pins on
-# the same fixtures; they (plus the property-fixture module and any
+# operator-internal adversarial/edge-case fixtures and the per-module
+# oracle re-runs whose query-level behavior test_correctness already
+# pins on the same fixtures; they (plus the property-fixture module and any
 # sf0.01 oracle re-run elsewhere) run in the nightly lane so the
 # default lane fits the driver's verify window.
 _NIGHTLY_MODULE_PREFIXES = ("test_datapipe", "test_properties")
@@ -31,6 +31,20 @@ def pytest_collection_modifyitems(config, items):
             p in item.name for p in _NIGHTLY_NAME_PATTERNS
         ):
             item.add_marker(_pytest.mark.nightly)
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    # Make the default lane's deferral visible in every run.
+    deferred = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("nightly")
+    ]
+    if deferred:
+        terminalreporter.write_line(
+            f'{len(deferred)} nightly tests deselected by -m "not nightly"; '
+            "run them with: pytest tests/ -m nightly"
+        )
 
 
 @pytest.fixture(scope="session")

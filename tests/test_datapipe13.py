@@ -1,5 +1,4 @@
-"""datapipe13 queries (staged through the round-4 registry freeze,
-published round 5): full local verification against the DuckDB
+"""datapipe13 queries: full local verification against the DuckDB
 oracles — the same comparison the driver gate runs — plus kernel-level
 behavioral tests. The fleet-wide plan lint (test_plan_lint.py) covers
 these names now that they are in REGISTRY."""
@@ -8,12 +7,17 @@ from __future__ import annotations
 
 import pytest
 
-from cqdg_etl_spark.queries.datapipe13 import STAGED
+from cqdg_etl_spark.queries import REGISTRY
 from tests.oracle_harness import canonical_rows, duckdb_conn
+
+# This module's query batch, as registered.
+BATCH = {
+    n: q for n, q in REGISTRY.items() if q.fn.__module__ == "cqdg_etl_spark.queries.datapipe13"
+}
 
 
 def _compare_staged(spark, name: str, sf_dir: str) -> None:
-    q = STAGED[name]
+    q = BATCH[name]
     actual = q.fn(spark, sf_dir).toPandas()
     expected = duckdb_conn(sf_dir).execute(q.oracle).df()
     assert sorted(actual.columns) == sorted(expected.columns), name
@@ -30,16 +34,7 @@ def _compare_staged(spark, name: str, sf_dir: str) -> None:
         )
 
 
-def test_staged_published():
-    """Round 5 lifted the round-4 freeze: every staged name is in the
-    registry, bound to the same Query object."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, name
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_oracle_match(spark, sf_dir, name):
     _compare_staged(spark, name, sf_dir)
 

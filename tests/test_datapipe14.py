@@ -1,10 +1,9 @@
-"""datapipe14 queries (staged for round-6 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-(the fixture parquet dir doubles as an sf_dir, so the hand-built edge
-cases get the oracle treatment too) and hand-computed expectations.
-A staged-scope plan lint mirrors tests/test_plan_lint.py until
-publication moves these names under the fleet-wide lint."""
+"""datapipe14 queries: full local verification against the DuckDB oracles —
+the same comparison the driver gate runs — plus adversarial fixtures run
+through BOTH engines (the fixture parquet dir doubles as an sf_dir, so
+the hand-built edge cases get the oracle treatment too) and
+hand-computed expectations. A per-module plan lint mirrors
+tests/test_plan_lint.py."""
 
 from __future__ import annotations
 
@@ -13,12 +12,17 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from cqdg_etl_spark.queries.datapipe14 import STAGED
+from cqdg_etl_spark.queries import REGISTRY
 from tests.oracle_harness import canonical_rows, duckdb_conn
+
+# This module's query batch, as registered.
+BATCH = {
+    n: q for n, q in REGISTRY.items() if q.fn.__module__ == "cqdg_etl_spark.queries.datapipe14"
+}
 
 
 def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
+    q = BATCH[name]
     actual = q.fn(spark, sf_dir).toPandas()
     con = con or duckdb_conn(sf_dir)
     expected = con.execute(q.oracle).df()
@@ -36,20 +40,11 @@ def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
         )
 
 
-def test_staged_published():
-    """Round-6 publication: every staged name is bound in REGISTRY to
-    the SAME Query object (not a shadowing copy)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, name
-
-
 def test_staged_batch_size():
-    assert len(STAGED) == 10
+    assert len(BATCH) == 10
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_oracle_match(spark, sf_dir, name):
     _compare_staged(spark, name, sf_dir)
 
@@ -60,9 +55,9 @@ _FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin",
               "BatchEvalPython ")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
+    df = BATCH[name].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "extended"
@@ -76,7 +71,7 @@ def test_staged_plan_lint(spark, sf_dir, name):
 
 
 def _fixture_dir(spark, tmp_path, **tables) -> str:
-    """Write hand-built tables as parquet under one dir so the STAGED
+    """Write hand-built tables as parquet under one dir so the BATCH
     fn and its DuckDB oracle both read identical bytes."""
     d = str(tmp_path / "fx")
     for name, df in tables.items():
@@ -115,7 +110,7 @@ def test_paragraph_dedup_cross_and_within_doc(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, documents=docs)
     out = {
         r["doc_id"]: (r["n_paras"], r["n_kept"])
-        for r in STAGED["dd_paragraph_dedup"].fn(spark, d).collect()
+        for r in BATCH["dd_paragraph_dedup"].fn(spark, d).collect()
     }
     # doc 1 owns p1+p2; doc 2 keeps only p3 (p1 seen); doc 3 keeps none
     assert out == {1: (2, 2), 2: (2, 1), 3: (2, 0)}
@@ -139,7 +134,7 @@ def test_lsh_recall_identical_docs_decile10(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, documents=docs)
     rows = {
         r["jaccard_decile"]: r
-        for r in STAGED["dd_lsh_recall_eval"].fn(spark, d).collect()
+        for r in BATCH["dd_lsh_recall_eval"].fn(spark, d).collect()
     }
     assert rows[10]["n_true_pairs"] == 6  # C(4,2) identical pairs
     assert rows[10]["recall"] == 1.0
@@ -163,7 +158,7 @@ def test_length_buckets_boundaries(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, documents=docs)
     out = {
         r["bucket_lo"]: r
-        for r in STAGED["ds_length_buckets"].fn(spark, d).collect()
+        for r in BATCH["ds_length_buckets"].fn(spark, d).collect()
     }
     assert set(out) == {1, 4, 8}
     assert (out[1]["bucket_hi"], out[1]["docs_per_batch"]) == (1, 4096)
@@ -194,7 +189,7 @@ def test_waterfill_hand_computed(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, documents=docs)
     out = {
         r["source"]: (r["alloc_tokens"], r["saturated"])
-        for r in STAGED["ds_waterfill_budget"].fn(spark, d).collect()
+        for r in BATCH["ds_waterfill_budget"].fn(spark, d).collect()
     }
     assert out == {"small": (10, True), "mid": (20, True), "big": (35, False)}
     assert sum(a for a, _ in out.values()) == 65  # == budget exactly
@@ -213,7 +208,7 @@ def test_waterfill_remainder_distribution(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, documents=docs)
     out = {
         r["source"]: r["alloc_tokens"]
-        for r in STAGED["ds_waterfill_budget"].fn(spark, d).collect()
+        for r in BATCH["ds_waterfill_budget"].fn(spark, d).collect()
     }
     assert out == {"s0": 5, "s1": 4, "s2": 4}
     _compare_staged(spark, "ds_waterfill_budget", d,
@@ -237,7 +232,7 @@ def test_kcore_k4_survives_pendant_chain_peels(spark, tmp_path):
     )
     d = _fixture_dir(spark, tmp_path, lineitem=li)
     out = {r["node"]: r["deg"]
-           for r in STAGED["graph_kcore_peel"].fn(spark, d).collect()}
+           for r in BATCH["graph_kcore_peel"].fn(spark, d).collect()}
     assert out == {1: 3, 2: 3, 3: 3, 4: 3}
     _compare_staged(spark, "graph_kcore_peel", d,
                     con=_fixture_conn(d, ["lineitem"]))
@@ -262,7 +257,7 @@ def test_ewma_hand_computed(spark, tmp_path):
         " value double",
     )
     d = _fixture_dir(spark, tmp_path, events=ev)
-    out = STAGED["ev_ewma_smoothed"].fn(spark, d).collect()
+    out = BATCH["ev_ewma_smoothed"].fn(spark, d).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["n_events"], r["final_ewma"], r["max_ewma"]) == (3, 4.0, 6.0)
@@ -274,7 +269,7 @@ def test_ewma_arrival_order_invariance(spark, sf_dir, tmp_path):
     bit-identical state."""
     from cqdg_etl_spark.queries.registry import load
 
-    base = STAGED["ev_ewma_smoothed"].fn(spark, sf_dir).toPandas()
+    base = BATCH["ev_ewma_smoothed"].fn(spark, sf_dir).toPandas()
     shuffled = (
         load(spark, sf_dir, "events")
         .orderBy(F.md5(F.concat_ws(":", "user_id", "event_id")))
@@ -282,7 +277,7 @@ def test_ewma_arrival_order_invariance(spark, sf_dir, tmp_path):
     )
     d = str(tmp_path / "shuf")
     shuffled.write.mode("overwrite").parquet(f"{d}/events.parquet")
-    again = STAGED["ev_ewma_smoothed"].fn(spark, d).toPandas()
+    again = BATCH["ev_ewma_smoothed"].fn(spark, d).toPandas()
     assert canonical_rows(again) == canonical_rows(base)
 
 
@@ -303,7 +298,7 @@ def test_mp4_demux_matches_direct_python(spark, sf_dir):
     from cqdg_etl_spark.queries.datapipe14 import _MP4_DELTA, _mp4_samples_for
     from cqdg_etl_spark.queries.registry import load
 
-    out = STAGED["mm_mp4_demux_stats"].fn(spark, sf_dir).toPandas()
+    out = BATCH["mm_mp4_demux_stats"].fn(spark, sf_dir).toPandas()
     assert out["n_samples"].between(2, 8).all()
     docs = load(spark, sf_dir, "documents").select("doc_id", "text").limit(5)
     for row in docs.collect():
@@ -332,7 +327,7 @@ def test_dim_variance_isolates_varying_dim(spark, tmp_path):
         "vec_id long, embedding array<float>, label int",
     )
     d = _fixture_dir(spark, tmp_path, embeddings=emb)
-    out = STAGED["emb_dim_variance_topk"].fn(spark, d).collect()
+    out = BATCH["emb_dim_variance_topk"].fn(spark, d).collect()
     assert out[0]["dim"] == 5 and out[0]["variance"] == 1.0  # ((1-2)^2+(3-2)^2)/2
     assert all(r["variance"] == 0.0 for r in out[1:])
     _compare_staged(spark, "emb_dim_variance_topk", d,

@@ -1,10 +1,9 @@
-"""datapipe15 queries (staged for round-7 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-(the fixture parquet dir doubles as an sf_dir, so the hand-built edge
-cases get the oracle treatment too) and hand-computed expectations.
-A staged-scope plan lint mirrors tests/test_plan_lint.py until
-publication moves these names under the fleet-wide lint."""
+"""datapipe15 queries: full local verification against the DuckDB oracles —
+the same comparison the driver gate runs — plus adversarial fixtures run
+through BOTH engines (the fixture parquet dir doubles as an sf_dir, so
+the hand-built edge cases get the oracle treatment too) and
+hand-computed expectations. A per-module plan lint mirrors
+tests/test_plan_lint.py."""
 
 from __future__ import annotations
 
@@ -13,12 +12,17 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from cqdg_etl_spark.queries.datapipe15 import STAGED
+from cqdg_etl_spark.queries import REGISTRY
 from tests.oracle_harness import canonical_rows, duckdb_conn
+
+# This module's query batch, as registered.
+BATCH = {
+    n: q for n, q in REGISTRY.items() if q.fn.__module__ == "cqdg_etl_spark.queries.datapipe15"
+}
 
 
 def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
+    q = BATCH[name]
     actual = q.fn(spark, sf_dir).toPandas()
     con = con or duckdb_conn(sf_dir)
     expected = con.execute(q.oracle).df()
@@ -36,23 +40,11 @@ def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
         )
 
 
-def test_staged_not_published():
-    """Round-7 publication flipped: every datapipe15 name is now bound
-    in the published registry to the SAME Query object (the
-    datapipe13/14 publication discipline)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, (
-            f"datapipe15 name {name!r} not published into REGISTRY"
-        )
-
-
 def test_staged_batch_size():
-    assert len(STAGED) == 12
+    assert len(BATCH) == 12
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_oracle_match(spark, sf_dir, name):
     _compare_staged(spark, name, sf_dir)
 
@@ -63,9 +55,9 @@ _FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin",
               "BatchEvalPython ")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
+    df = BATCH[name].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "extended"
@@ -79,7 +71,7 @@ def test_staged_plan_lint(spark, sf_dir, name):
 
 
 def _fixture_dir(spark, tmp_path, **tables) -> str:
-    """Write hand-built tables as parquet under one dir so the STAGED
+    """Write hand-built tables as parquet under one dir so the BATCH
     fn and its DuckDB oracle both read identical bytes."""
     d = str(tmp_path / "fx")
     for name, df in tables.items():
@@ -121,7 +113,7 @@ def test_truncation_catches_what_jaccard_misses(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, documents=docs)
     rows = {
         (r["doc_a"], r["doc_b"]): (r["len_a"], r["len_b"])
-        for r in STAGED["dd_truncation_prefix_pairs"].fn(spark, d).collect()
+        for r in BATCH["dd_truncation_prefix_pairs"].fn(spark, d).collect()
     }
     assert rows == {(1, 2): (20, 200)}
     _compare_staged(spark, "dd_truncation_prefix_pairs", d,
@@ -140,7 +132,7 @@ def test_truncation_whitespace_normalized(spark, tmp_path):
         _DOC_SCHEMA,
     )
     d = _fixture_dir(spark, tmp_path, documents=docs)
-    out = STAGED["dd_truncation_prefix_pairs"].fn(spark, d).collect()
+    out = BATCH["dd_truncation_prefix_pairs"].fn(spark, d).collect()
     assert [(r["doc_a"], r["doc_b"]) for r in out] == [(1, 2)]
 
 
@@ -157,7 +149,7 @@ def test_syllable_complexity_hand_computed(spark, tmp_path):
         [(1, "banana analysis go", "en", "s0", 1)], _DOC_SCHEMA
     )
     d = _fixture_dir(spark, tmp_path, documents=docs)
-    r = STAGED["tx_syllable_complexity"].fn(spark, d).collect()[0]
+    r = BATCH["tx_syllable_complexity"].fn(spark, d).collect()[0]
     assert (r["n_docs"], r["words"], r["syllables"]) == (1, 3, 7)
     assert r["complex_word_rate"] == round(2 / 3, 6)
     assert r["long_word_rate"] == round(1 / 3, 6)
@@ -184,7 +176,7 @@ def test_novelty_first_occurrence_ordering(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, documents=docs)
     out = {
         r["doc_id"]: (r["n_shingles"], r["novel"])
-        for r in STAGED["tx_shingle_novelty"].fn(spark, d).collect()
+        for r in BATCH["tx_shingle_novelty"].fn(spark, d).collect()
     }
     # doc1: 10 shingles, all first; doc2: same 10, none first;
     # doc3: 22 distinct shingles (a-run 10 shared + 2 bridge + 10 b-run),
@@ -224,7 +216,7 @@ def test_seasonal_outlier_planted_spike(spark, tmp_path):
         "value double, props string",
     )
     d = _fixture_dir(spark, tmp_path, events=ev)
-    out = STAGED["ev_seasonal_outliers"].fn(spark, d).collect()
+    out = BATCH["ev_seasonal_outliers"].fn(spark, d).collect()
     assert [r["event_id"] for r in out] == [99]
     assert out[0]["zscore"] > 2.5
     _compare_staged(spark, "ev_seasonal_outliers", d,
@@ -237,7 +229,7 @@ def test_seasonal_outlier_planted_spike(spark, tmp_path):
 def test_kfold_exact_balance_per_stratum(spark, sf_dir):
     """The whole point vs hash-mod-k: within every stratum the fold
     sizes differ by at most one."""
-    out = STAGED["ds_stratified_kfold"].fn(spark, sf_dir).collect()
+    out = BATCH["ds_stratified_kfold"].fn(spark, sf_dir).collect()
     by_lang: dict[str, list[int]] = {}
     for r in out:
         by_lang.setdefault(r["lang"], []).append(r["n"])
@@ -249,10 +241,10 @@ def test_kfold_exact_balance_per_stratum(spark, sf_dir):
 
 def test_kfold_deterministic(spark, sf_dir):
     a = sorted(
-        map(tuple, STAGED["ds_stratified_kfold"].fn(spark, sf_dir).collect())
+        map(tuple, BATCH["ds_stratified_kfold"].fn(spark, sf_dir).collect())
     )
     b = sorted(
-        map(tuple, STAGED["ds_stratified_kfold"].fn(spark, sf_dir).collect())
+        map(tuple, BATCH["ds_stratified_kfold"].fn(spark, sf_dir).collect())
     )
     assert a == b
 
@@ -266,7 +258,7 @@ def test_weighted_wor_no_repeats_and_weight_bias(spark, sf_dir):
     exceeds the corpus mean (long docs are favored by construction —
     the probabilistic statement is deterministic here because the md5
     draw is fixed)."""
-    out = STAGED["ds_weighted_sample_wor"].fn(spark, sf_dir).collect()
+    out = BATCH["ds_weighted_sample_wor"].fn(spark, sf_dir).collect()
     assert len(out) == 100
     ids = [r["doc_id"] for r in out]
     assert len(set(ids)) == 100
@@ -282,8 +274,8 @@ def test_weighted_wor_no_repeats_and_weight_bias(spark, sf_dir):
 
 
 def test_weighted_wor_determinism(spark, sf_dir):
-    a = sorted(map(tuple, STAGED["ds_weighted_sample_wor"].fn(spark, sf_dir).collect()))
-    b = sorted(map(tuple, STAGED["ds_weighted_sample_wor"].fn(spark, sf_dir).collect()))
+    a = sorted(map(tuple, BATCH["ds_weighted_sample_wor"].fn(spark, sf_dir).collect()))
+    b = sorted(map(tuple, BATCH["ds_weighted_sample_wor"].fn(spark, sf_dir).collect()))
     assert a == b
 
 
@@ -294,7 +286,7 @@ def test_rendezvous_minimal_disruption(spark, sf_dir):
     """The defining property: growing the ring 16 -> 17 moves a doc
     ONLY to the new shard — every off-diagonal matrix row must have
     shard_after == 16 — and the moved fraction is near 1/17."""
-    out = STAGED["ds_rendezvous_rebalance"].fn(spark, sf_dir).collect()
+    out = BATCH["ds_rendezvous_rebalance"].fn(spark, sf_dir).collect()
     total = sum(r["n_docs"] for r in out)
     moved = 0
     for r in out:
@@ -328,7 +320,7 @@ def test_ppr_mass_decays_with_distance(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, lineitem=li)
     out = {
         r["node"]: r["rank_rel"]
-        for r in STAGED["graph_personalized_pagerank"].fn(spark, d).collect()
+        for r in BATCH["graph_personalized_pagerank"].fn(spark, d).collect()
     }
     # seed set = {0} (0 % 97 == 0)
     assert out[0] == max(out.values())
@@ -348,7 +340,7 @@ def test_ppr_no_seed_mass_without_seeds_in_component(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, lineitem=li)
     out = {
         r["node"]: r["rank_rel"]
-        for r in STAGED["graph_personalized_pagerank"].fn(spark, d).collect()
+        for r in BATCH["graph_personalized_pagerank"].fn(spark, d).collect()
     }
     assert out[501] == 0.0 and out[502] == 0.0
     assert out[0] > 0.0 and out[1] > 0.0
@@ -365,7 +357,7 @@ def test_lsh_param_audit_monotone_and_model(spark, sf_dir):
 
     rows = {
         r["bands"]: r
-        for r in STAGED["dd_lsh_param_audit"].fn(spark, sf_dir).collect()
+        for r in BATCH["dd_lsh_param_audit"].fn(spark, sf_dir).collect()
     }
     assert set(rows) == {8, 16, 32}
     assert (
@@ -383,11 +375,9 @@ def test_lsh_param_audit_monotone_and_model(spark, sf_dir):
 def test_lsh_param_audit_subsumes_registered_candidates(spark, sf_dir):
     """The 16x4 audit arm measures exactly the registered
     dd_minhash_lsh_candidates pair set (same signature, same layout)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
     n_16 = {
         r["bands"]: r["n_candidate_pairs"]
-        for r in STAGED["dd_lsh_param_audit"].fn(spark, sf_dir).collect()
+        for r in BATCH["dd_lsh_param_audit"].fn(spark, sf_dir).collect()
     }[16]
     n_reg = REGISTRY["dd_minhash_lsh_candidates"].fn(spark, sf_dir).count()
     assert n_16 == n_reg
@@ -430,7 +420,7 @@ def test_bpe_pretoken_hand_computed(spark, tmp_path):
         [(1, "Ab2 c!!", "en", "s0", 7)], _DOC_SCHEMA
     )
     d = _fixture_dir(spark, tmp_path, documents=docs)
-    out = STAGED["tx_bpe_pretoken_stats"].fn(spark, d).collect()
+    out = BATCH["tx_bpe_pretoken_stats"].fn(spark, d).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n_pretokens"] == 5
@@ -471,7 +461,7 @@ def test_strict_funnel_order_and_windows(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, events=ev)
     out = {
         r["stage"]: r["n_users"]
-        for r in STAGED["ev_strict_funnel_3step"].fn(spark, d).collect()
+        for r in BATCH["ev_strict_funnel_3step"].fn(spark, d).collect()
     }
     assert out == {"signup": 4, "view": 2, "purchase": 1}
     _compare_staged(spark, "ev_strict_funnel_3step", d,
@@ -499,7 +489,7 @@ def test_dispersion_tight_vs_mixed_cluster(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, embeddings=emb)
     out = {
         r["label"]: r
-        for r in STAGED["emb_intra_class_dispersion"].fn(spark, d).collect()
+        for r in BATCH["emb_intra_class_dispersion"].fn(spark, d).collect()
     }
     assert out[0]["n_vectors"] == 4 and out[1]["n_vectors"] == 2
     assert out[0]["mean_cos_to_centroid"] == 1.0

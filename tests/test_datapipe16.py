@@ -1,21 +1,24 @@
-"""datapipe16 queries (staged for round-8 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-and hand-computed expectations. A staged-scope plan lint mirrors
-tests/test_plan_lint.py until publication moves these names under the
-fleet-wide lint."""
+"""datapipe16 queries: full local verification against the DuckDB oracles —
+the same comparison the driver gate runs — plus adversarial fixtures run
+through BOTH engines and hand-computed expectations. A per-module plan
+lint mirrors tests/test_plan_lint.py."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
 
-from cqdg_etl_spark.queries.datapipe16 import STAGED
+from cqdg_etl_spark.queries import REGISTRY
 from tests.oracle_harness import canonical_rows, duckdb_conn
+
+# This module's query batch, as registered.
+BATCH = {
+    n: q for n, q in REGISTRY.items() if q.fn.__module__ == "cqdg_etl_spark.queries.datapipe16"
+}
 
 
 def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
+    q = BATCH[name]
     actual = q.fn(spark, sf_dir).toPandas()
     con = con or duckdb_conn(sf_dir)
     expected = con.execute(q.oracle).df()
@@ -33,23 +36,11 @@ def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
         )
 
 
-def test_staged_not_published():
-    """Round-8 publication flipped: every datapipe16 name is now bound
-    in the published registry to the SAME Query object (the
-    datapipe13/14/15 publication discipline)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, (
-            f"datapipe16 name {name!r} not published into REGISTRY"
-        )
-
-
 def test_staged_batch_size():
-    assert len(STAGED) == 5
+    assert len(BATCH) == 5
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_oracle_match(spark, sf_dir, name):
     _compare_staged(spark, name, sf_dir)
 
@@ -60,9 +51,9 @@ _FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin",
               "BatchEvalPython ")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
+    df = BATCH[name].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "extended"
@@ -107,11 +98,10 @@ def test_rerank_sanity_and_shortlist_monotonicity(spark, sf_dir):
     shortlist always survives the exact rerank into the top-5, so
     widening the shortlist can only help."""
     from cqdg_etl_spark.operators.ann_rerank import ivf_pq_rerank_topk
-    from cqdg_etl_spark.queries import REGISTRY
     from cqdg_etl_spark.queries.registry import load
     from pyspark.sql import functions as F
 
-    approx = STAGED["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect()
+    approx = BATCH["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect()
     exact = REGISTRY["ann_topk_bruteforce"].fn(spark, sf_dir).collect()
     ap = {(r["query_id"], r["neighbor_id"]) for r in approx}
     ex = {(r["query_id"], r["neighbor_id"]) for r in exact}
@@ -171,8 +161,8 @@ def test_rerank_recall_on_clustered_data(spark):
 
 
 def test_rerank_deterministic(spark, sf_dir):
-    a = sorted(map(tuple, STAGED["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect()))
-    b = sorted(map(tuple, STAGED["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect()))
+    a = sorted(map(tuple, BATCH["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect()))
+    b = sorted(map(tuple, BATCH["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect()))
     assert a == b
 
 
@@ -190,7 +180,7 @@ def test_calibration_identical_docs_bucket10(spark, tmp_path):
         _DOC_SCHEMA,
     )
     d = _fixture_dir(spark, tmp_path, documents=docs)
-    rows = STAGED["dd_minhash_calibration"].fn(spark, d).collect()
+    rows = BATCH["dd_minhash_calibration"].fn(spark, d).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["bucket"], r["n_pairs"]) == (10, 1)
@@ -218,7 +208,7 @@ def test_cluster_profile_sizes_and_invariant(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, documents=docs)
     hist = {
         r["cluster_size"]: r["n_clusters"]
-        for r in STAGED["dd_dup_cluster_size_profile"].fn(spark, d).collect()
+        for r in BATCH["dd_dup_cluster_size_profile"].fn(spark, d).collect()
     }
     assert hist == {3: 1, 2: 1, 1: 1}
     assert sum(s * n for s, n in hist.items()) == 6
@@ -231,7 +221,7 @@ def test_cluster_profile_corpus_invariant(spark, sf_dir):
 
     hist = {
         r["cluster_size"]: r["n_clusters"]
-        for r in STAGED["dd_dup_cluster_size_profile"].fn(spark, sf_dir).collect()
+        for r in BATCH["dd_dup_cluster_size_profile"].fn(spark, sf_dir).collect()
     }
     n_docs = _d.connect().execute(
         f"SELECT count(*) FROM '{sf_dir}/documents.parquet'"
@@ -264,7 +254,7 @@ def test_robust_zscore_planted_spike(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, events=ev)
     out = {
         r["event_type"]: r
-        for r in STAGED["pf_robust_zscore_event_value"].fn(spark, d).collect()
+        for r in BATCH["pf_robust_zscore_event_value"].fn(spark, d).collect()
     }
     assert out["click"]["median_cents"] == 1000
     assert out["click"]["mad_cents"] == 0
@@ -294,7 +284,7 @@ def test_js_divergence_bounds_and_edges(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, documents=docs)
     out = {
         (r["source_a"], r["source_b"]): r["js"]
-        for r in STAGED["tx_source_js_divergence"].fn(spark, d).collect()
+        for r in BATCH["tx_source_js_divergence"].fn(spark, d).collect()
     }
     assert len(out) == 6
     assert out[("s0", "s1")] == 0.0              # identical

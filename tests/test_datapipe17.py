@@ -1,9 +1,7 @@
-"""datapipe17 queries (staged for round-9 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-and hand-computed expectations. A staged-scope plan lint mirrors
-tests/test_plan_lint.py until publication moves these names under the
-fleet-wide lint."""
+"""datapipe17 queries: full local verification against the DuckDB oracles —
+the same comparison the driver gate runs — plus adversarial fixtures run
+through BOTH engines and hand-computed expectations. A per-module plan
+lint mirrors tests/test_plan_lint.py."""
 
 from __future__ import annotations
 
@@ -14,12 +12,17 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from cqdg_etl_spark.queries.datapipe17 import STAGED
+from cqdg_etl_spark.queries import REGISTRY
 from tests.oracle_harness import canonical_rows, duckdb_conn
+
+# This module's query batch, as registered.
+BATCH = {
+    n: q for n, q in REGISTRY.items() if q.fn.__module__ == "cqdg_etl_spark.queries.datapipe17"
+}
 
 
 def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
+    q = BATCH[name]
     actual = q.fn(spark, sf_dir).toPandas()
     con = con or duckdb_conn(sf_dir)
     expected = con.execute(q.oracle).df()
@@ -37,28 +40,16 @@ def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
         )
 
 
-def test_staged_published():
-    """Round-9 publication flipped: every datapipe17 name is now bound
-    in the published registry to the SAME Query object (the
-    datapipe13-16 publication discipline)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, (
-            f"datapipe17 name {name!r} not published into REGISTRY"
-        )
-
-
 def test_staged_batch_size():
-    assert len(STAGED) == 9
+    assert len(BATCH) == 9
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_oracle_match(spark, sf_dir, name):
     _compare_staged(spark, name, sf_dir)
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_oracle_match_sf_medium(spark, name):
     """The driver gate compares at sf0.01 — run the same comparison at
     that SF in CI instead of leaving it to ad-hoc sweeps (round-8
@@ -92,9 +83,9 @@ _BNLJ_OK: dict[str, str] = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
+    df = BATCH[name].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "extended"
@@ -155,7 +146,7 @@ def test_entropy_hand_computed(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, documents=docs)
     out = {
         r.source: r.asDict()
-        for r in STAGED["tx_char_entropy_quality"].fn(spark, d).collect()
+        for r in BATCH["tx_char_entropy_quality"].fn(spark, d).collect()
     }
     assert out["s1"]["mean_entropy_bits"] == 0.0
     assert out["s1"]["n_low_entropy"] == 1
@@ -172,8 +163,8 @@ def test_entropy_hand_computed(spark, tmp_path):
     assert out["s3"]["n_low_entropy"] == 0
     # engine-vs-oracle on the same fixture
     con = _fixture_conn(d, ["documents"])
-    e = con.execute(STAGED["tx_char_entropy_quality"].oracle).df()
-    a = STAGED["tx_char_entropy_quality"].fn(spark, d).toPandas()
+    e = con.execute(BATCH["tx_char_entropy_quality"].oracle).df()
+    a = BATCH["tx_char_entropy_quality"].fn(spark, d).toPandas()
     assert canonical_rows(a) == canonical_rows(e)
 
 
@@ -198,7 +189,7 @@ def test_km_hand_computed(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, events=events)
     out = {
         r.duration_days: r.asDict()
-        for r in STAGED["ev_survival_km"].fn(spark, d).collect()
+        for r in BATCH["ev_survival_km"].fn(spark, d).collect()
     }
     assert set(out) == {10, 20, 98, 100}
     assert out[10]["at_risk"] == 5 and out[10]["deaths"] == 2
@@ -208,8 +199,8 @@ def test_km_hand_computed(spark, tmp_path):
     assert out[98]["deaths"] == 0 and out[100]["deaths"] == 0
     assert out[100]["survival"] == out[20]["survival"]  # flat past last death
     con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["ev_survival_km"].oracle).df()
-    a = STAGED["ev_survival_km"].fn(spark, d).toPandas()
+    e = con.execute(BATCH["ev_survival_km"].oracle).df()
+    a = BATCH["ev_survival_km"].fn(spark, d).toPandas()
     assert canonical_rows(a) == canonical_rows(e)
 
 
@@ -234,7 +225,7 @@ def test_km_full_extinction_reaches_zero(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, events=events)
     out = {
         r.duration_days: r.asDict()
-        for r in STAGED["ev_survival_km"].fn(spark, d).collect()
+        for r in BATCH["ev_survival_km"].fn(spark, d).collect()
     }
     # t=0: user 9 (censored, duration 0) leaves; at_risk 4, d 0.
     assert out[0]["at_risk"] == 4 and out[0]["deaths"] == 0
@@ -243,8 +234,8 @@ def test_km_full_extinction_reaches_zero(spark, tmp_path):
     assert out[5]["at_risk"] == 3 and out[5]["deaths"] == 3
     assert out[5]["survival"] == 0.0
     con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["ev_survival_km"].oracle).df()
-    a = STAGED["ev_survival_km"].fn(spark, d).toPandas()
+    e = con.execute(BATCH["ev_survival_km"].oracle).df()
+    a = BATCH["ev_survival_km"].fn(spark, d).toPandas()
     assert canonical_rows(a) == canonical_rows(e)
 
 
@@ -266,7 +257,7 @@ def test_curriculum_round_robin(spark, tmp_path):
         _DOC_SCHEMA,
     )
     d = _fixture_dir(spark, tmp_path, documents=docs)
-    rows = STAGED["ds_curriculum_interleave"].fn(spark, d).collect()
+    rows = BATCH["ds_curriculum_interleave"].fn(spark, d).collect()
     by_pos = {r.position: r for r in rows}
     assert sorted(by_pos) == [1, 2, 3, 4, 5, 6]
     # odd positions are source a (s_idx 1), even are b (s_idx 2)
@@ -275,8 +266,8 @@ def test_curriculum_round_robin(spark, tmp_path):
     assert [by_pos[p].doc_id for p in (1, 3, 5)] == [1, 3, 2]
     assert [by_pos[p].doc_id for p in (2, 4, 6)] == [4, 6, 5]
     con = _fixture_conn(d, ["documents"])
-    e = con.execute(STAGED["ds_curriculum_interleave"].oracle).df()
-    a = STAGED["ds_curriculum_interleave"].fn(spark, d).toPandas()
+    e = con.execute(BATCH["ds_curriculum_interleave"].oracle).df()
+    a = BATCH["ds_curriculum_interleave"].fn(spark, d).toPandas()
     assert canonical_rows(a) == canonical_rows(e)
 
 
@@ -299,14 +290,14 @@ def test_hits_hand_structure(spark, tmp_path):
     ]
     events = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=events)
-    out = STAGED["graph_hits_scores"].fn(spark, d).collect()
+    out = BATCH["graph_hits_scores"].fn(spark, d).collect()
     scores = {r.user_id: r.hub for r in out}
     assert max(scores, key=scores.get) == 1
     assert scores[1] == 1.0  # max-normalized
     assert scores[5] == min(scores.values())
     con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["graph_hits_scores"].oracle).df()
-    a = STAGED["graph_hits_scores"].fn(spark, d).toPandas()
+    e = con.execute(BATCH["graph_hits_scores"].oracle).df()
+    a = BATCH["graph_hits_scores"].fn(spark, d).toPandas()
     assert canonical_rows(a) == canonical_rows(e)
 
 
@@ -331,7 +322,7 @@ def test_peak_concurrency_hand_computed(spark, tmp_path):
     ]
     events = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=events)
-    out = STAGED["ev_peak_concurrency"].fn(spark, d).collect()
+    out = BATCH["ev_peak_concurrency"].fn(spark, d).collect()
     lvl = {r.peak_t_us: r.concurrency for r in out}
     us = lambda m: int((base + dt.timedelta(minutes=m)).timestamp() * 1e6)
     assert lvl[us(8)] == 3       # A, B, C all active
@@ -342,8 +333,8 @@ def test_peak_concurrency_hand_computed(spark, tmp_path):
     assert lvl[us(10)] == 3
     assert lvl[us(0)] == 1
     con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["ev_peak_concurrency"].oracle).df()
-    a = STAGED["ev_peak_concurrency"].fn(spark, d).toPandas()
+    e = con.execute(BATCH["ev_peak_concurrency"].oracle).df()
+    a = BATCH["ev_peak_concurrency"].fn(spark, d).toPandas()
     assert canonical_rows(a) == canonical_rows(e)
 
 
@@ -358,14 +349,14 @@ def test_type_affinity_hand_computed(spark, tmp_path):
     rows = [(i, base, u, t, 1.0, "{}") for i, (u, t) in enumerate(pairs)]
     events = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=events)
-    out = STAGED["graph_type_affinity"].fn(spark, d).collect()
+    out = BATCH["graph_type_affinity"].fn(spark, d).collect()
     assert len(out) == 1
     r = out[0]
     assert (r.type_a, r.type_b, r.co_users) == ("a", "b", 2)
     assert abs(r.affinity - math.floor(2 / math.sqrt(6) * 1e6 + 0.5) / 1e6) < 1e-12
     con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["graph_type_affinity"].oracle).df()
-    a = STAGED["graph_type_affinity"].fn(spark, d).toPandas()
+    e = con.execute(BATCH["graph_type_affinity"].oracle).df()
+    a = BATCH["graph_type_affinity"].fn(spark, d).toPandas()
     assert canonical_rows(a) == canonical_rows(e)
 
 
@@ -385,7 +376,7 @@ def test_vocab_growth_hand_computed(spark, tmp_path):
     )
     d = _fixture_dir(spark, tmp_path, documents=docs)
     out = {r.decile: r for r in
-           STAGED["tx_vocab_growth_curve"].fn(spark, d).collect()}
+           BATCH["tx_vocab_growth_curve"].fn(spark, d).collect()}
     assert sorted(out) == list(range(1, 11))
     assert out[10].cum_tokens == 10 and out[10].cum_vocab == 4
     assert out[1].cum_tokens == 1 and out[1].cum_vocab == 1   # 'a'
@@ -397,8 +388,8 @@ def test_vocab_growth_hand_computed(spark, tmp_path):
         assert out[i].cum_tokens >= out[i - 1].cum_tokens
         assert out[i].cum_vocab >= out[i - 1].cum_vocab
     con = _fixture_conn(d, ["documents"])
-    e = con.execute(STAGED["tx_vocab_growth_curve"].oracle).df()
-    a = STAGED["tx_vocab_growth_curve"].fn(spark, d).toPandas()
+    e = con.execute(BATCH["tx_vocab_growth_curve"].oracle).df()
+    a = BATCH["tx_vocab_growth_curve"].fn(spark, d).toPandas()
     assert canonical_rows(a) == canonical_rows(e)
 
 
@@ -419,15 +410,15 @@ def test_dau_wau_hand_computed(spark, tmp_path):
     )
     d = _fixture_dir(spark, tmp_path, events=events)
     out = {r.day: r for r in
-           STAGED["ev_dau_wau_stickiness"].fn(spark, d).collect()}
+           BATCH["ev_dau_wau_stickiness"].fn(spark, d).collect()}
     assert sorted(out) == ["2024-03-01", "2024-03-02", "2024-03-09"]
     assert (out["2024-03-01"].dau, out["2024-03-01"].wau) == (2, 2)
     assert (out["2024-03-02"].dau, out["2024-03-02"].wau) == (1, 2)
     assert out["2024-03-02"].stickiness == 0.5
     assert (out["2024-03-09"].dau, out["2024-03-09"].wau) == (1, 1)
     con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["ev_dau_wau_stickiness"].oracle).df()
-    a = STAGED["ev_dau_wau_stickiness"].fn(spark, d).toPandas()
+    e = con.execute(BATCH["ev_dau_wau_stickiness"].oracle).df()
+    a = BATCH["ev_dau_wau_stickiness"].fn(spark, d).toPandas()
     assert canonical_rows(a) == canonical_rows(e)
 
 
@@ -439,7 +430,7 @@ def test_resample_expected_count_bounds(spark, sf_dir):
     exactly the target weight, and the realized total sits within a
     loose Chernoff-ish band of the expected total (the estimator is a
     sum of independent-ish Bernoullis)."""
-    rows = STAGED["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
+    rows = BATCH["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
     tot_w = sum(r.weight for r in rows)
     tot_c = sum(r.n_copies for r in rows)
     for r in rows:
@@ -451,10 +442,10 @@ def test_resample_expected_count_bounds(spark, sf_dir):
 def test_resample_deterministic_rerun(spark, sf_dir):
     a = sorted(
         (r.doc_id, r.n_copies)
-        for r in STAGED["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
+        for r in BATCH["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
     )
     b = sorted(
         (r.doc_id, r.n_copies)
-        for r in STAGED["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
+        for r in BATCH["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
     )
     assert a == b

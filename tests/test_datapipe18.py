@@ -1,10 +1,9 @@
-"""datapipe18 queries (staged for round-10 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-and hand-computed expectations. A staged-scope plan lint mirrors
-tests/test_plan_lint.py until publication moves these names under the
-fleet-wide lint (_BNLJ_OK → BNLJ_OK, _GLOBAL_WINDOW_OK →
-GLOBAL_WINDOW_OK — the orphan test enforces both copies)."""
+"""datapipe18 queries: full local verification against the DuckDB oracles —
+the same comparison the driver gate runs — plus adversarial fixtures run
+through BOTH engines and hand-computed expectations. A per-module plan
+lint mirrors tests/test_plan_lint.py (_BNLJ_OK → BNLJ_OK,
+_GLOBAL_WINDOW_OK → GLOBAL_WINDOW_OK — the orphan test enforces both
+copies)."""
 
 from __future__ import annotations
 
@@ -12,12 +11,17 @@ import math
 
 import pytest
 
-from cqdg_etl_spark.queries.datapipe18 import STAGED
+from cqdg_etl_spark.queries import REGISTRY
 from tests.oracle_harness import canonical_rows, duckdb_conn
+
+# This module's query batch, as registered.
+BATCH = {
+    n: q for n, q in REGISTRY.items() if q.fn.__module__ == "cqdg_etl_spark.queries.datapipe18"
+}
 
 
 def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
+    q = BATCH[name]
     actual = q.fn(spark, sf_dir).toPandas()
     con = con or duckdb_conn(sf_dir)
     expected = con.execute(q.oracle).df()
@@ -35,28 +39,16 @@ def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
         )
 
 
-def test_staged_published():
-    """Round-10 publication flipped: every datapipe18 name is now bound
-    in the published registry to the SAME Query object (the
-    datapipe13-17 publication discipline)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, (
-            f"datapipe18 name {name!r} not published into REGISTRY"
-        )
-
-
 def test_staged_batch_size():
-    assert len(STAGED) == 8
+    assert len(BATCH) == 8
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_oracle_match(spark, sf_dir, name):
     _compare_staged(spark, name, sf_dir)
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_oracle_match_sf_medium(spark, name):
     """The driver gate compares at sf0.01 — run the same comparison at
     that SF in CI instead of leaving it to ad-hoc sweeps (round-8
@@ -100,9 +92,9 @@ _GLOBAL_WINDOW_OK: dict[str, str] = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
+    df = BATCH[name].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "extended"
@@ -165,7 +157,7 @@ def test_woe_hand_computed(spark, tmp_path):
     orders = spark.createDataFrame(rows, _ORD_SCHEMA)
     d = _fixture_dir(spark, tmp_path, orders=orders)
     out = {r.category: r.asDict()
-           for r in STAGED["fe_woe_information_value"].fn(spark, d).collect()}
+           for r in BATCH["fe_woe_information_value"].fn(spark, d).collect()}
     woe_u = _q6(math.log((3.5 / 4) / (1.5 / 4)))
     assert out["1-URGENT"]["woe"] == woe_u
     assert out["1-URGENT"]["iv_term"] == _q6((3.5 / 4 - 1.5 / 4) * woe_u)
@@ -190,7 +182,7 @@ def test_changepoint_level_shift(spark, tmp_path):
                      "click", v, "{}"))
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=ev)
-    out = STAGED["ev_changepoint_cusum"].fn(spark, d).collect()
+    out = BATCH["ev_changepoint_cusum"].fn(spark, d).collect()
     assert len(out) == 1
     r = out[0].asDict()
     assert r["cp_day"] == "2024-01-10"  # last day of the low regime
@@ -210,7 +202,7 @@ def test_changepoint_tie_breaks_earliest(spark, tmp_path):
                      "view", v, "{}"))
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=ev)
-    r = STAGED["ev_changepoint_cusum"].fn(spark, d).collect()[0].asDict()
+    r = BATCH["ev_changepoint_cusum"].fn(spark, d).collect()[0].asDict()
     # mean = 10; prefix sums of (v-10): -5, 0, -5, 0, -5, 0 — max |S|
     # = 5 first reached on day 1.
     assert r["cp_day"] == "2024-02-01"
@@ -240,7 +232,7 @@ def test_modularity_two_triangles(spark, tmp_path):
     )
     d = _fixture_dir(spark, tmp_path, lineitem=li, part=part)
     out = {r.label: r.asDict()
-           for r in STAGED["graph_modularity_brands"].fn(spark, d).collect()}
+           for r in BATCH["graph_modularity_brands"].fn(spark, d).collect()}
     expect = _q6(3.0 / 7.0 - (7.0 / 14.0) ** 2)
     for lab in ("X", "Y"):
         assert out[lab]["n_nodes"] == 3
@@ -269,7 +261,7 @@ def test_bfs_path_graph(spark, tmp_path):
     li = spark.createDataFrame(li_rows, _LI_COLS)
     d = _fixture_dir(spark, tmp_path, lineitem=li)
     out = {r.node: r.hop
-           for r in STAGED["graph_bfs_hops"].fn(spark, d).collect()}
+           for r in BATCH["graph_bfs_hops"].fn(spark, d).collect()}
     for n in range(1, 11):
         assert out[n] == 0  # every clique node is a source
     assert out[20] == 1 and out[21] == 2 and out[22] == 3
@@ -293,7 +285,7 @@ def test_ndcg_hand_computed(spark, tmp_path):
     )
     d = _fixture_dir(spark, tmp_path, documents=docs)
     rows = sorted(
-        (r.asDict() for r in STAGED["ret_ndcg_eval"].fn(spark, d).collect()),
+        (r.asDict() for r in BATCH["ret_ndcg_eval"].fn(spark, d).collect()),
         key=lambda r: r["rank"],
     )
     # Retrieved order: doc 3 (4 rare terms), doc 2 (2 terms), doc 1.
@@ -321,7 +313,7 @@ def test_ndcg_penalizes_inversion(spark, tmp_path):
         documents=spark.createDataFrame(docs, _DOC_SCHEMA),
     )
     rows = sorted(
-        (r.asDict() for r in STAGED["ret_ndcg_eval"].fn(spark, d).collect()),
+        (r.asDict() for r in BATCH["ret_ndcg_eval"].fn(spark, d).collect()),
         key=lambda r: r["rank"],
     )
     by_rank = {r["rank"]: r for r in rows}
@@ -364,7 +356,7 @@ def test_mi_independent_and_dependent(spark, tmp_path):
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=ev)
     out = {r.pair: r.asDict()
-           for r in STAGED["pf_column_mutual_information"].fn(spark, d)
+           for r in BATCH["pf_column_mutual_information"].fn(spark, d)
            .collect()}
     assert out["event_type|hour"]["mi_nats"] == 0.0
     assert out["event_type|vbucket"]["mi_nats"] == 0.0
@@ -379,7 +371,7 @@ def test_mi_independent_and_dependent(spark, tmp_path):
     ev2 = spark.createDataFrame(rows2, _EV_SCHEMA)
     d2 = _fixture_dir(spark, tmp_path.joinpath("b"), events=ev2)
     out2 = {r.pair: r.asDict()
-            for r in STAGED["pf_column_mutual_information"].fn(spark, d2)
+            for r in BATCH["pf_column_mutual_information"].fn(spark, d2)
             .collect()}
     # Two cells, each q6(0.5 * ln 2); exact decimal sum.
     assert out2["event_type|vbucket"]["mi_nats"] == round(
@@ -408,7 +400,7 @@ def test_attribution_linear_split_and_window(spark, tmp_path):
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=ev)
     out = {(r.channel, r.campaign): r.asDict()
-           for r in STAGED["ev_attribution_linear"].fn(spark, d).collect()}
+           for r in BATCH["ev_attribution_linear"].fn(spark, d).collect()}
     assert set(out) == {("view", 0), ("click", 1)}
     assert out[("view", 0)]["credited_conversions"] == 0.5
     assert out[("view", 0)]["credited_value"] == 50.0
@@ -430,7 +422,7 @@ def test_dhash_fake_kernel_matches_python(spark, tmp_path):
         [(1, text, "en", "s", 19)], _DOC_SCHEMA
     )
     d = _fixture_dir(spark, tmp_path, documents=docs)
-    row = STAGED["mm_image_dhash_index"].fn(spark, d).collect()[0].asDict()
+    row = BATCH["mm_image_dhash_index"].fn(spark, d).collect()[0].asDict()
 
     h = hashlib.md5(text.encode()).hexdigest()
     hexcat = h

@@ -1,10 +1,8 @@
-"""datapipe19 queries (staged for round-11 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-and hand-computed expectations. A staged-scope plan lint mirrors
-tests/test_plan_lint.py until publication moves these names under the
-fleet-wide lint (_BNLJ_OK → BNLJ_OK; the orphan test enforces the
-copy)."""
+"""datapipe19 queries: full local verification against the DuckDB oracles —
+the same comparison the driver gate runs — plus adversarial fixtures run
+through BOTH engines and hand-computed expectations. A per-module plan
+lint mirrors tests/test_plan_lint.py (_BNLJ_OK → BNLJ_OK; the orphan
+test enforces the copy)."""
 
 from __future__ import annotations
 
@@ -12,12 +10,17 @@ import math
 
 import pytest
 
-from cqdg_etl_spark.queries.datapipe19 import STAGED
+from cqdg_etl_spark.queries import REGISTRY
 from tests.oracle_harness import canonical_rows, duckdb_conn
+
+# This module's query batch, as registered.
+BATCH = {
+    n: q for n, q in REGISTRY.items() if q.fn.__module__ == "cqdg_etl_spark.queries.datapipe19"
+}
 
 
 def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
+    q = BATCH[name]
     actual = q.fn(spark, sf_dir).toPandas()
     con = con or duckdb_conn(sf_dir)
     expected = con.execute(q.oracle).df()
@@ -35,28 +38,16 @@ def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
         )
 
 
-def test_staged_published():
-    """Round-11 publication flipped: every datapipe19 name is now bound
-    in the published registry to the SAME Query object (the
-    datapipe13-18 publication discipline)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, (
-            f"datapipe19 name {name!r} not published into REGISTRY"
-        )
-
-
 def test_staged_batch_size():
-    assert len(STAGED) == 8
+    assert len(BATCH) == 8
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_oracle_match(spark, sf_dir, name):
     _compare_staged(spark, name, sf_dir)
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_oracle_match_sf_medium(spark, name):
     """The driver gate compares at sf0.01 — run the same comparison at
     that SF in CI instead of leaving it to ad-hoc sweeps (round-8
@@ -86,9 +77,9 @@ _BNLJ_OK: dict[str, str] = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(BATCH))
 def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
+    df = BATCH[name].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "extended"
@@ -155,7 +146,7 @@ def test_matryoshka_deterministic_ties(spark, tmp_path):
     emb = spark.createDataFrame(rows, _EMB_SCHEMA)
     d = _fixture_dir(spark, tmp_path, embeddings=emb)
     out = {r.query_id: r.asDict()
-           for r in STAGED["emb_matryoshka_recall"].fn(spark, d).collect()}
+           for r in BATCH["emb_matryoshka_recall"].fn(spark, d).collect()}
     assert set(out) == {0}
     # Full top-10 = ids 10..19 (tail +); truncated top-10 = ids 10..19
     # (head ties broken by lowest id) — so recall is exactly 1.0 here;
@@ -188,7 +179,7 @@ def test_matryoshka_partial_overlap(spark, tmp_path):
         rows.append((i, [float(x) for x in v], 0))
     emb = spark.createDataFrame(rows, _EMB_SCHEMA)
     d = _fixture_dir(spark, tmp_path, embeddings=emb)
-    out = STAGED["emb_matryoshka_recall"].fn(spark, d).collect()[0].asDict()
+    out = BATCH["emb_matryoshka_recall"].fn(spark, d).collect()[0].asDict()
     # Full top-10: 5 B (20..24) + the 5 lowest-id A (10..14).
     # Truncated top-10: A ties → ids 10..19. Overlap = {10..14}.
     assert out["n_overlap"] == 5 and out["recall"] == 0.5
@@ -210,7 +201,7 @@ def test_markov_two_state_alternator(spark, tmp_path):
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=ev)
     out = {r.event_type: r.asDict()
-           for r in STAGED["ev_markov_stationary"].fn(spark, d).collect()}
+           for r in BATCH["ev_markov_stationary"].fn(spark, d).collect()}
     assert out["click"]["pi"] == 0.5 and out["view"]["pi"] == 0.5
     assert out["click"]["empirical"] == 0.5
 
@@ -227,7 +218,7 @@ def test_markov_absorbing_bias(spark, tmp_path):
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=ev)
     out = {r.event_type: r.asDict()
-           for r in STAGED["ev_markov_stationary"].fn(spark, d).collect()}
+           for r in BATCH["ev_markov_stationary"].fn(spark, d).collect()}
 
     # Python mirror of the engine arithmetic (6-dp quantized P and pi,
     # exact sums via Fraction-free float on small values is safe here
@@ -268,7 +259,7 @@ def test_gini_equal_and_skewed(spark, tmp_path):
             eid += 1
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=ev)
-    r = STAGED["ev_user_gini"].fn(spark, d).collect()[0].asDict()
+    r = BATCH["ev_user_gini"].fn(spark, d).collect()[0].asDict()
     assert r["gini"] == 0.0 and r["n_users"] == 4 and r["total_events"] == 12
 
     rows2 = []
@@ -279,7 +270,7 @@ def test_gini_equal_and_skewed(spark, tmp_path):
             eid += 1
     ev2 = spark.createDataFrame(rows2, _EV_SCHEMA)
     d2 = _fixture_dir(spark, tmp_path.joinpath("b"), events=ev2)
-    r2 = STAGED["ev_user_gini"].fn(spark, d2).collect()[0].asDict()
+    r2 = BATCH["ev_user_gini"].fn(spark, d2).collect()[0].asDict()
     assert r2["gini"] == _q6(2 * 34 / (4 * 10) - 5 / 4)  # 0.45
 
 
@@ -303,7 +294,7 @@ def test_autocorr_alternating_series(spark, tmp_path):
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=ev)
     out = {(r.event_type, r.lag): r.asDict()
-           for r in STAGED["pf_autocorr_daily"].fn(spark, d).collect()}
+           for r in BATCH["pf_autocorr_daily"].fn(spark, d).collect()}
     assert out[("click", 1)]["r_autocorr"] == _q6(-9 / 10)
     assert out[("click", 1)]["n_pairs"] == 9
     assert out[("click", 7)]["r_autocorr"] == _q6(-3 / 10)
@@ -329,7 +320,7 @@ def test_rake_hand_computed(spark, tmp_path):
     )
     d = _fixture_dir(spark, tmp_path, documents=docs)
     out = {r.word: r.asDict()
-           for r in STAGED["tx_rake_keywords"].fn(spark, d).collect()}
+           for r in BATCH["tx_rake_keywords"].fn(spark, d).collect()}
     assert "the" not in out and "sat" not in out  # stopwords (df 100%)
     assert out["cat"]["deg"] == 4 and out["cat"]["freq"] == 2
     assert out["cat"]["score"] == 2.0
@@ -352,7 +343,7 @@ def test_neighbor_jaccard_perfect_twin(spark, tmp_path):
         li_rows.append((i, b))
     li = spark.createDataFrame(li_rows, _LI_COLS)
     d = _fixture_dir(spark, tmp_path, lineitem=li)
-    rows = STAGED["graph_neighbor_jaccard"].fn(spark, d).collect()
+    rows = BATCH["graph_neighbor_jaccard"].fn(spark, d).collect()
     top = rows[0].asDict()
     assert (top["a"], top["b"]) == (1, 4)
     assert top["common"] == 2 and top["jaccard"] == 1.0
@@ -389,7 +380,7 @@ def test_fk_audit_containment(spark, tmp_path):
     d = _fixture_dir(spark, tmp_path, lineitem=li, part=part,
                      orders=orders, customer=customer, events=ev)
     out = {r.relation: r.asDict()
-           for r in STAGED["pf_fk_candidate_audit"].fn(spark, d).collect()}
+           for r in BATCH["pf_fk_candidate_audit"].fn(spark, d).collect()}
     li_part = out["lineitem.l_partkey->part.p_partkey"]
     assert li_part["n_child_distinct"] == 3
     assert li_part["n_matched"] == 2
@@ -418,7 +409,7 @@ def test_poisson_burst_single_spike(spark, tmp_path):
             eid += 1
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
     d = _fixture_dir(spark, tmp_path, events=ev)
-    r = STAGED["ev_poisson_burst_days"].fn(spark, d).collect()[0].asDict()
+    r = BATCH["ev_poisson_burst_days"].fn(spark, d).collect()[0].asDict()
     assert r["lambda_daily"] == 19.0
     assert r["n_burst_days"] == 1
     assert r["max_daily"] == 100

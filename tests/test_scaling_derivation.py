@@ -19,10 +19,43 @@ corpus size. These tests pin the three contracts that make that safe:
 from __future__ import annotations
 
 import math
+import re
 
 from cqdg_etl_spark.operators import similarity
 
 BASE = (8, 4)
+
+# Session-varying plan tokens: expression and plan ids, the stage and
+# codegen ids of cached subtrees, object addresses.
+_PLAN_IDS = [
+    (re.compile(r"#\d+"), "#x"),
+    (re.compile(r"plan_id=\d+"), "plan_id=x"),
+    (re.compile(r"QueryStage \d+"), "QueryStage x"),
+    (re.compile(r"\*\(\d+\)"), "*(x)"),
+    (re.compile(r"0x[0-9a-f]+"), "0xX"),
+]
+_LAMBDA = re.compile(r"\blambda ([A-Za-z0-9_]+?)_(\d+)\b")
+
+
+def _normalize_plan(plan: str) -> str:
+    """Plan text with session-varying ids normalized out. Catalyst
+    numbers lambda variables from a session-global counter, so they are
+    renumbered per plan in first-occurrence order, keeping the base name
+    (distinct variables in one expression stay distinct)."""
+    seen: dict[tuple[str, str], int] = {}
+    counts: dict[str, int] = {}
+
+    def renumber(m):
+        key = (m.group(1), m.group(2))
+        if key not in seen:
+            seen[key] = counts.get(m.group(1), 0)
+            counts[m.group(1)] = seen[key] + 1
+        return f"lambda {m.group(1)}_{seen[key]}"
+
+    plan = _LAMBDA.sub(renumber, plan)
+    for rx, repl in _PLAN_IDS:
+        plan = rx.sub(repl, plan)
+    return plan
 
 
 def test_derive_banding_base_config_at_harness_sizes():
@@ -65,12 +98,6 @@ def test_registered_queries_unchanged_at_harness_scale(spark, sf_dir):
     """The derived config at ≤2000 vectors IS the base config: the
     registered queries' optimized plans must be byte-identical to an
     explicit base-config call (after expression-id normalization)."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from tools.verification_state import _normalize_plan
-
     from cqdg_etl_spark.queries.registry import REGISTRY, load
 
     def norm(df):
