@@ -111,6 +111,12 @@ def run_release(spark, write_raw, root: str) -> dict:
     write_raw(raw)
     write_ontology_fixtures(onto)
     write_dictionary(dictionary)
+    return process_release(spark, raw, onto, dictionary, root)
+
+
+def process_release(spark, raw: str, onto: str, dictionary: str, root: str) -> dict:
+    """Pre-process and process a written release; the trees go to
+    ``root/indexes``. Returns the index frames by tree name."""
     PreProcessETL(
         spark, FixtureDictionary(dictionary), DeterministicIdResolver(),
         raw, f"{root}/with-ids",
@@ -155,7 +161,11 @@ def schema_pin(dt: DataType):
 
 
 def snapshot(spark, write_raw, root: str) -> dict:
-    frames = run_release(spark, write_raw, root)
+    return snapshot_of(run_release(spark, write_raw, root), root)
+
+
+def snapshot_of(frames: dict, root: str) -> dict:
+    """Schema pin and canonical documents of the trees under ``root``."""
     return {
         "schema": {t: schema_pin(df.schema) for t, df in frames.items()},
         "docs": {t: read_tree(f"{root}/indexes/{t}") for t in TREES},
