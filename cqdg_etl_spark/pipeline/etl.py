@@ -8,6 +8,10 @@ Improvements over the reference, by design:
 - the 10 shared frames are ``.cache()``d — the reference recomputes
   every one of them for each of the 3 index builders
   (ProcessETL.scala:82,98-120), tripling the heaviest joins;
+- the five frames only the availability summary reads (treatments,
+  exposures, follow-ups, family history, family relationships) are
+  ``(study, donor)`` key projections of their entities, not the
+  reference's per-donor nested lists (see ``groupings.load_all``);
 - Keycloak registration receives the same distinct internal_file_id set
   but through a pluggable no-op port (HTTP out of engine scope).
 """

@@ -1,8 +1,12 @@
 """Entity grouping/denormalization (reference: ProcessETLUtils.scala:20-475).
 
 Builds the 10 shared intermediate frames consumed by the three index
-builders. All pattern A1 (groupBy + collect_list(struct)) with the
-reference's column in/exclusions kept verbatim.
+builders. Donor, diagnoses, phenotypes and biospecimens are pattern A1
+(groupBy + collect_list(struct)) with the reference's column
+in/exclusions kept verbatim. The five summary-only frames are key
+projections: the reference nests each entity per (study, donor)
+(ProcessETLUtils.scala:427-436), but only the availability summary reads
+them, and it needs nothing but the keys (see ``summary._clinical_rows``).
 """
 
 from __future__ import annotations
@@ -119,17 +123,6 @@ def load_diagnoses(
         F.collect_list(
             _struct_except(dx_full, ["study_id", "submitter_donor_id"])
         ).alias("diagnoses")
-    )
-
-
-def load_per_donor_and_study(
-    df: DataFrame, named_as: str, donor_col: str = "submitter_donor_id"
-) -> DataFrame:
-    """(reference: ProcessETLUtils.scala:427-436)"""
-    return df.groupBy("study_id", donor_col).agg(
-        F.collect_list(_struct_except(df, ["study_id", donor_col])).alias(
-            f"{named_as}s_per_donor_per_study"
-        )
     )
 
 
@@ -321,6 +314,7 @@ def load_all(
         ontologies["mondo"],
         ontologies["icd"],
     )
+    keys = ["study_id", "submitter_donor_id"]
     return {
         "donor": donor,
         "diagnosisPerDonorAndStudy": diagnoses,
@@ -329,19 +323,10 @@ def load_all(
             entities["biospecimen"], entities["sample_registration"]
         ),
         "file": entities["file"],
-        "treatmentsPerDonorAndStudy": load_per_donor_and_study(
-            entities["treatment"], "treatment"
-        ),
-        "exposuresPerDonorAndStudy": load_per_donor_and_study(
-            entities["exposure"], "exposure"
-        ),
-        "followUpsPerDonorAndStudy": load_per_donor_and_study(
-            entities["follow-up"], "followUp"
-        ),
-        "familyHistoryPerDonorAndStudy": load_per_donor_and_study(
-            entities["family-history"], "familyHistory"
-        ),
-        "familyRelationshipPerDonorAndStudy": load_per_donor_and_study(
-            entities["family"], "familyRelationship"
-        ),
+        # Summary-only frames: their keys are all the summary reads.
+        "treatmentsPerDonorAndStudy": entities["treatment"].select(*keys),
+        "exposuresPerDonorAndStudy": entities["exposure"].select(*keys),
+        "followUpsPerDonorAndStudy": entities["follow-up"].select(*keys),
+        "familyHistoryPerDonorAndStudy": entities["family-history"].select(*keys),
+        "familyRelationshipPerDonorAndStudy": entities["family"].select(*keys),
     }

@@ -92,7 +92,14 @@ CLINICAL_FRAMES = [
 
 def _clinical_rows(frames: dict[str, DataFrame]) -> DataFrame:
     """Union of the 7 frames as (study, donor, key, complete): ``key`` names
-    the frame, ``complete`` is true when the row has no NULL column."""
+    the frame, ``complete`` is true when the row has no NULL column.
+
+    The five summary-only frames are the entities' ``(study, donor)`` key
+    projections, where the reference groups each entity into one row per
+    pair with a ``collect_list`` payload. A ``collect_list`` array is never
+    NULL, so there ``complete`` already meant both keys are non-NULL, as it
+    does on the projection. The projection keeps duplicate pairs, which
+    ``countDistinct`` and ``collect_set`` below ignore."""
 
     def rows(df: DataFrame, name: str) -> DataFrame:
         complete = reduce(and_, [F.col(c).isNotNull() for c in df.columns])

@@ -10,7 +10,8 @@ produce:
    — nested as array<struct> (the donor-document "mondo"/"icd"/
    "observed_phenotypes" fields);
 2. ``tagged``: the directly-tagged terms with their main category
-   (the root ancestor selected by an ontology-specific predicate).
+   (the first ancestor, in array order, that an ontology-specific
+   predicate selects), computed on the row without an explode or join.
 
 Scale: the term table (ontologies are ≤ ~100k rows) is broadcast; the
 only shuffles are the two groupBys keyed on (study, donor[, term]).
@@ -18,6 +19,7 @@ only shuffles are the two groupBys keyed on (study, donor[, term]).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -28,24 +30,20 @@ from cqdg_etl_spark.functions.columns import display_name
 ICD_BLOCK_RE = "^[A-Z][0-9]{2}-[A-Z][0-9]{2}"
 
 
-def main_category_predicate(code_col: str) -> tuple[Column, str]:
-    """Ontology-specific root-category rule + owning entity type
-    (reference: ProcessETLUtils.scala:240-248)."""
+def main_category_predicate(code_col: str) -> tuple[Callable[[Column], Column], str]:
+    """Ontology-specific root-category rule over one ancestor struct +
+    owning entity type (reference: ProcessETLUtils.scala:240-248)."""
     if code_col == "phenotype_HPO_code":
         return (
-            F.array_contains(
-                F.col("main_category.parents"), "Phenotypic abnormality (HP:0000118)"
-            ),
+            lambda a: F.array_contains(a["parents"], "Phenotypic abnormality (HP:0000118)"),
             "phenotype",
         )
     if code_col == "diagnosis_mondo_code":
         return (
-            F.array_contains(
-                F.col("main_category.parents"), "disease or disorder (MONDO:0000001)"
-            ),
+            lambda a: F.array_contains(a["parents"], "disease or disorder (MONDO:0000001)"),
             "diagnosis",
         )
-    return (F.col("main_category.id").rlike(ICD_BLOCK_RE), "diagnosis")
+    return (lambda a: a["id"].rlike(ICD_BLOCK_RE), "diagnosis")
 
 
 def split_icd_chapter(icd_terms: DataFrame) -> DataFrame:
@@ -95,6 +93,11 @@ def add_ancestors_to_term(
 
     joined = data.join(F.broadcast(terms), data[code_col] == terms["id"], "left_outer")
 
+    # Main category: the first ancestor, in array order, that satisfies the
+    # ontology's rule (reference: ProcessETLUtils.scala:406-425, which
+    # explodes, filters and takes first() per tagged term). try_element_at
+    # gives NULL, not an error, when no ancestor qualifies.
+    main = F.try_element_at(F.filter("ancestors", condition), F.lit(1))
     tagged = (
         joined.select(
             "study_id",
@@ -107,8 +110,11 @@ def add_ancestors_to_term(
             "age_at_event",
             internal_id_col,
             "is_leaf",
+            F.lit(True).alias("is_tagged"),
+            F.concat(main["name"], F.lit(" ("), main["id"], F.lit(")")).alias(
+                "main_category"
+            ),
         )
-        .withColumn("is_tagged", F.lit(True))
         .filter(F.col("id").isNotNull())
     )
 
@@ -136,7 +142,7 @@ def add_ancestors_to_term(
         .withColumn("is_tagged", F.lit(False))
     )
 
-    combined = tagged.drop(sub_id).unionByName(ancestors)
+    combined = tagged.drop(sub_id, "main_category").unionByName(ancestors)
 
     # Normalize ages per distinct term: collect, flatten, sort, dedupe
     # (reference: ProcessETLUtils.scala:299-318 pattern A7).
@@ -174,36 +180,8 @@ def add_ancestors_to_term(
         ).alias(term_name)
     )
 
-    # Main category: first qualifying ancestor per tagged term
-    # (reference: ProcessETLUtils.scala:406-425). first() is
-    # order-dependent in the reference; we keep ancestor-array order
-    # deterministic by taking the first qualifying element of the
-    # ancestors array itself (same order the reference explodes in).
-    main_cat = (
-        joined.select(
-            "study_id",
-            "submitter_donor_id",
-            sub_id,
-            F.col(code_col).alias("id"),
-            F.explode_outer("ancestors").alias("main_category"),
-        )
-        .where(condition)
-        .groupBy("study_id", "submitter_donor_id", sub_id, "id")
-        .agg(
-            F.concat(
-                F.first("main_category.name"),
-                F.lit(" ("),
-                F.first("main_category.id"),
-                F.lit(")"),
-            ).alias("main_category")
-        )
-    )
-
     # Reference quirk kept: the tagged frame always drops the literal
     # column "internal_diagnosis_id" (ProcessETLUtils.scala:337) — a
     # no-op for phenotype enrichment, which therefore KEEPS its
     # internal_phenotype_id in the tagged output.
-    tagged_with_cat = tagged.join(
-        main_cat, ["study_id", "submitter_donor_id", sub_id, "id"], "left"
-    ).drop("internal_diagnosis_id")
-    return EnrichedTerms(grouped=grouped, tagged=tagged_with_cat)
+    return EnrichedTerms(grouped=grouped, tagged=tagged.drop("internal_diagnosis_id"))

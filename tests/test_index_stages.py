@@ -27,7 +27,7 @@ from cqdg_etl_spark.pipeline.groupings import load_all
 from cqdg_etl_spark.pipeline.preprocess import PreProcessETL
 from cqdg_etl_spark.sources import write_partitioned_json
 
-STAGE_CEILING = 150
+STAGE_CEILING = 80
 
 
 @pytest.fixture(scope="module")
