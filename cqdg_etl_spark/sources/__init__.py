@@ -1,6 +1,5 @@
 from cqdg_etl_spark.sources.readers import (
     read_csv,
-    read_json_literal,
     read_multiline_json,
     read_ndjson,
     read_orc,
@@ -16,8 +15,6 @@ from cqdg_etl_spark.sources.writers import (
     write_parquet,
     write_partitioned_json,
     write_range_sorted_parquet,
-    write_single_json,
-    write_single_tsv,
     write_xml,
 )
 
@@ -28,7 +25,6 @@ __all__ = [
     "read_orc",
     "read_csv",
     "read_parquet",
-    "read_json_literal",
     "read_table",
     "read_text",
     "read_xml",
@@ -37,7 +33,5 @@ __all__ = [
     "write_csv",
     "write_partitioned_json",
     "write_range_sorted_parquet",
-    "write_single_json",
-    "write_single_tsv",
     "write_xml",
 ]

@@ -1,4 +1,4 @@
-"""Source connectors (SURVEY.md §2.1, S1-S5).
+"""Source connectors (SURVEY.md §2.1, S1-S4).
 
 Reference semantics being reproduced:
 - S1 TSV scan: all-string schema, tab separator, header row, NO schema
@@ -8,9 +8,9 @@ Reference semantics being reproduced:
 - S3 NDJSON ontology scan, gzip-transparent
   (reference: processes/ProcessETLConfig.scala:30-33).
 - S4 parquet scan (reference: processes/ProcessETLConfig.scala:17-28).
-- S5 JSON-literal scan: parse an in-memory JSON string (e.g. an HTTP
-  response body) into a DataFrame
-  (reference: processes/PreProcessUtils.scala:96).
+
+The reference's JSON-literal scan (S5, processes/PreProcessUtils.scala:96)
+is not kept: the HTTP ID-server port parses its response on the driver.
 
 All readers return lazy logical plans; Catalyst applies column pruning
 and (for parquet) predicate pushdown downstream.
@@ -52,15 +52,6 @@ def read_ndjson(
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def read_json_literal(spark: SparkSession, json_str: str) -> DataFrame:
-    """Parse a driver-side JSON string (HTTP response body) into a frame.
-
-    PySpark 4 equivalent of ``spark.read.json(Seq(s).toDS())``
-    (reference: processes/PreProcessUtils.scala:96).
-    """
-    return spark.read.json(spark.sparkContext.parallelize([json_str]))
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

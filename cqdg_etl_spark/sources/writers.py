@@ -1,15 +1,14 @@
-"""Sink connectors (SURVEY.md §2.1, S6-S9).
+"""Sink connectors (SURVEY.md §2.1, S6-S7).
 
 - S6 parquet sink, overwrite per dataset
   (reference: processes/processes.scala:21-39).
 - S7 partitioned JSON sink for the index documents — partition columns
   enable downstream partition pruning
   (reference: processes/ProcessETLConfig.scala:36-38).
-- S8/S9 single-file coalesce for small CSV/JSON outputs
-  (reference: processes/processes.scala:28-30).
 
-Scale note: `coalesce(1)` is only for *small* human-facing outputs; the
-parquet and partitioned-JSON paths keep natural parallelism.
+The reference's single-file ``coalesce(1)`` CSV/JSON sinks (S8/S9,
+processes/processes.scala:28-30) are not kept: the job writes no such
+output.
 """
 
 from __future__ import annotations
@@ -31,14 +30,6 @@ def write_partitioned_json(df: DataFrame, path: str, partition_by: Sequence[str]
     df.write.partitionBy(*partition_by).mode("overwrite").json(path)
 
 
-def write_single_json(df: DataFrame, path: str) -> None:
-    df.coalesce(1).write.mode("overwrite").json(path)
-
-
-def write_single_tsv(df: DataFrame, path: str) -> None:
-    df.coalesce(1).write.mode("overwrite").options(sep="\t", header=True).csv(path)
-
-
 def write_orc(df: DataFrame, path: str, partition_by: Sequence[str] = ()) -> None:
     """ORC sink (zlib default) — columnar alternative where the reading
     stack is Hive/ORC-native; same partitioned-layout contract as the
@@ -52,8 +43,7 @@ def write_orc(df: DataFrame, path: str, partition_by: Sequence[str] = ()) -> Non
 def write_csv(
     df: DataFrame, path: str, sep: str = ",", header: bool = True
 ) -> None:
-    """Parallel CSV sink (one file per partition — unlike the
-    single-file human-facing ``write_single_tsv``)."""
+    """Parallel CSV sink (one file per partition)."""
     df.write.mode("overwrite").options(sep=sep, header=header).csv(path)
 
 
