@@ -12,25 +12,8 @@ os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 SF_MEDIUM = "/root/testdata/sf0.01"
 
-# Driver-lane split (see pytest.ini): the datapipe modules hold the
-# operator-internal adversarial/edge-case fixtures and the per-module
-# oracle re-runs whose query-level behavior test_correctness already
-# pins on the same fixtures; they (plus the property-fixture module and any
-# sf0.01 oracle re-run elsewhere) run in the nightly lane so the
-# default lane fits the driver's verify window.
-_NIGHTLY_MODULE_PREFIXES = ("test_datapipe", "test_properties")
-_NIGHTLY_NAME_PATTERNS = ("staged_oracle_match", "sf_medium")
-
-
-def pytest_collection_modifyitems(config, items):
-    import pytest as _pytest
-
-    for item in items:
-        mod = item.module.__name__.rsplit(".", 1)[-1]
-        if mod.startswith(_NIGHTLY_MODULE_PREFIXES) or any(
-            p in item.name for p in _NIGHTLY_NAME_PATTERNS
-        ):
-            item.add_marker(_pytest.mark.nightly)
+# The nightly lane (see pytest.ini) is chosen per module: the datapipe and
+# property modules carry ``pytestmark = pytest.mark.nightly``.
 
 
 def pytest_terminal_summary(terminalreporter, config):

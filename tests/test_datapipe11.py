@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.nightly
 
 
 def _write_orders(tmp_path, prices, dates):

@@ -4,6 +4,10 @@ tests/test_correctness.py.)"""
 
 from __future__ import annotations
 
+import pytest
+
+pytestmark = pytest.mark.nightly
+
 
 def _write_docs(tmp_path, rows):
     import pyarrow as pa

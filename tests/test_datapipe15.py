@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from cqdg_etl_spark.queries import REGISTRY
 from tests.oracle_harness import canonical_rows, duckdb_conn
 
+pytestmark = pytest.mark.nightly
+
 # This module's query batch, as registered.
 BATCH = {
     n: q for n, q in REGISTRY.items() if q.fn.__module__ == "cqdg_etl_spark.queries.datapipe15"

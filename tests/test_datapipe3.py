@@ -3,6 +3,7 @@ mixture-weighted sampling, bigram-LM scoring, JSON props extraction."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cqdg_etl_spark.operators.lm import bigram_lm_scores
@@ -14,6 +15,8 @@ from cqdg_etl_spark.operators.similarity import (
     cosine_dup_pairs,
     semantic_dedup,
 )
+
+pytestmark = pytest.mark.nightly
 
 
 # ------------------------------------------------- semantic dedup

@@ -6,6 +6,7 @@ registry; these pin the operator semantics directly.)
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cqdg_etl_spark.operators.diff import snapshot_diff
@@ -14,6 +15,8 @@ from cqdg_etl_spark.operators.ranking import interleave_by_weight
 from cqdg_etl_spark.operators.similarity import pq_codes
 from cqdg_etl_spark.operators.sparse_sim import tfidf_cosine_pairs
 from cqdg_etl_spark.plans.introspect import explain_str
+
+pytestmark = pytest.mark.nightly
 
 
 def test_snapshot_diff_classifies_all_four(spark):

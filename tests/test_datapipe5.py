@@ -8,7 +8,10 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.nightly
 
 
 # ------------------------------------------------------- merge_upsert

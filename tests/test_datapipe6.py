@@ -9,7 +9,10 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.nightly
 
 
 # ----------------------------------------------------- resample_ffill

@@ -4,7 +4,10 @@ level oracle parity is covered by tests/test_correctness.py.)"""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.nightly
 
 
 # ------------------------------------------------ pps_systematic_sample
