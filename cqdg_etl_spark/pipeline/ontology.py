@@ -96,7 +96,9 @@ def add_ancestors_to_term(
     # Main category: the first ancestor, in array order, that satisfies the
     # ontology's rule (reference: ProcessETLUtils.scala:406-425, which
     # explodes, filters and takes first() per tagged term). try_element_at
-    # gives NULL, not an error, when no ancestor qualifies.
+    # gives NULL, not an error, when no ancestor qualifies. Unlike the
+    # reference's equi-join back on (study, donor, submitter id, term), a
+    # row with a NULL key keeps its main category.
     main = F.try_element_at(F.filter("ancestors", condition), F.lit(1))
     tagged = (
         joined.select(
