@@ -8,6 +8,9 @@ document by document, with the JSON files under ``tests/golden/``:
 - ``edge.json``: a test-local copy of that fixture with summary edge cases
   added (see :func:`write_edge_fixtures`).
 
+A third release, with no ``experimental_strategy`` value anywhere, checks
+the summaries' inner-join rule without a golden.
+
 Documents are read back from the written partitioned JSON, with the
 partition values taken from the path. ``collect_list`` order is not
 defined, so every nested array is sorted before comparing. The index
@@ -241,6 +244,46 @@ def test_edge_missing_category_counts_zero_files(snapshots):
         by_category = donors[donor]["summary"]["data_category"]
         assert {c["key"]: c["files"] for c in by_category} == counts, donor
 
+
+def write_no_strategy_fixtures(d: str) -> None:
+    """The 3-donor fixture with an empty ``experimental_strategy`` on every
+    file, so that field has no non-NULL value anywhere."""
+    write_clinical_fixtures(d)
+    with open(f"{d}/file.tsv") as fh:
+        rows = [line.rstrip("\n").split("\t") for line in fh]
+    col = rows[0].index("experimental_strategy")
+    for row in rows[1:]:
+        row[col] = ""
+    with open(f"{d}/file.tsv", "w") as fh:
+        fh.writelines("\t".join(row) + "\n" for row in rows)
+
+
+def _nodes(value):
+    """Every object nested anywhere in ``value``, itself included."""
+    if isinstance(value, dict):
+        yield value
+        value = list(value.values())
+    if isinstance(value, list):
+        for v in value:
+            yield from _nodes(v)
+
+
+def test_field_without_values_leaves_every_summary_out(spark, tmp_path):
+    """The reference inner-joins the per-field summaries (Summary.scala:30-88):
+    with no ``experimental_strategy`` value anywhere, no study and no donor
+    gets a summary, and no ``data_category`` entry has a NULL key."""
+    run_release(spark, write_no_strategy_fixtures, str(tmp_path))
+    docs = {t: read_tree(f"{tmp_path}/indexes/{t}") for t in TREES}
+    assert docs["studies"] and docs["donors"]
+    for tree in ("studies", "donors"):
+        assert [d for d in docs[tree] if "summary" in d] == [], tree
+    entries = [
+        entry
+        for node in _nodes(docs)
+        if isinstance(node.get("data_category"), list)
+        for entry in node["data_category"]
+    ]
+    assert all(e.get("key") is not None for e in entries)
 
 if __name__ == "__main__":
     from cqdg_etl_spark.session import get_spark
