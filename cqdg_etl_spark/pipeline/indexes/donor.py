@@ -20,25 +20,7 @@ def build_donor_index(
     bio = data["biospecimenWithSamples"]
     file = data["file"]
 
-    donor_per_file, _, combos = S.prepare_summary_frames(donor, file)
-    by_category = S.files_by_field(donor_per_file, combos, "data_category")
-    by_strategy = S.files_by_field(donor_per_file, combos, "experimental_strategy")
-    available = S.clinical_data_available_per_donor(combos, data)
-
     keys = ["study_id", "submitter_donor_id"]
-    summary_group = (
-        by_category.join(by_strategy, keys)
-        .join(available, keys)
-        .select(
-            *keys,
-            F.struct(
-                "data_category",
-                "experimental_strategy",
-                "clinical_data_available",
-                "clinical_data_available_only",
-            ).alias("summary"),
-        )
-    )
 
     file_renamed = (
         file.select(
@@ -83,7 +65,7 @@ def build_donor_index(
         donor_with_study.join(dx, keys, "left")
         .join(phen, keys, "left")
         .join(files_per_donor, keys, "left")
-        .join(summary_group, keys, "left")
+        .join(S.donor_summary(donor, file, data), keys, "left")
         .select(
             *[
                 F.col(c)

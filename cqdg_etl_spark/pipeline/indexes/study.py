@@ -25,24 +25,6 @@ def build_study_index(
     bio = data["biospecimenWithSamples"]
     file = data["file"]
 
-    donor_per_file, studies, _ = S.prepare_summary_frames(donor, file)
-    by_category = S.donors_and_files_by_field(donor_per_file, studies, "data_category")
-    by_strategy = S.donors_and_files_by_field(
-        donor_per_file, studies, "experimental_strategy"
-    )
-    clinical = S.clinical_data_available(data)
-
-    summary_group = (
-        by_category.join(by_strategy, "study_id")
-        .join(clinical, "study_id")
-        .select(
-            "study_id",
-            F.struct(
-                "data_category", "experimental_strategy", "clinical_data_available"
-            ).alias("summary"),
-        )
-    )
-
     donor_payload_cols = [
         c for c in donor.columns if c not in ("study_id", "submitter_family_id")
     ]
@@ -87,7 +69,7 @@ def build_study_index(
     return (
         study.join(donors_group, ["study_id"], "left")
         .join(files_group, ["study_id"], "left")
-        .join(summary_group, ["study_id"], "left")
+        .join(S.study_summary(donor, file, data), ["study_id"], "left")
         .withColumn("dictionary_version", F.lit(metadata.dictionary_version))
         .withColumn("study_version", F.lit(metadata.study_version))
         .withColumn(
