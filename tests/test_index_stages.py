@@ -1,11 +1,12 @@
 """Stage ceiling for writing the ``donors`` and ``studies`` index trees.
 
 On this pipeline the cost of a release pass follows the number of Spark
-stages it submits, and the per-donor / per-study summaries used to hold
-most of them. Each tree of the 3-donor fixture is written under its own
-job group, with the shared frames already cached, and the stages its jobs
-submitted are counted through ``statusTracker`` (skipped stages are never
-submitted, so they are not counted).
+stages it runs, and the per-donor / per-study summaries used to hold most
+of them. Each tree of the 3-donor fixture is written under its own job
+group, with the shared frames already cached, and the stages its jobs ran
+are counted through ``statusTracker``. A job also lists the lineage
+stages of a cached frame or a reused shuffle; those are skipped, finish no
+task and are not counted.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from cqdg_etl_spark.pipeline.groupings import load_all
 from cqdg_etl_spark.pipeline.preprocess import PreProcessETL
 from cqdg_etl_spark.sources import write_partitioned_json
 
-STAGE_CEILING = 80
+STAGE_CEILING = 35
 
 
 @pytest.fixture(scope="module")
@@ -55,7 +56,8 @@ def trees(spark, tmp_path_factory):
         df.unpersist()
 
 
-def submitted_stages(sc, group: str) -> int:
+def stages_run(sc, group: str) -> int:
+    """Stages of the group's jobs that completed at least one task."""
     # statusTracker is fed by the listener bus; drain it so no job is missed.
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
@@ -63,7 +65,8 @@ def submitted_stages(sc, group: str) -> int:
     for job_id in tracker.getJobIdsForGroup(group):
         job = tracker.getJobInfo(job_id)
         if job is not None:
-            stages += sum(tracker.getStageInfo(s) is not None for s in job.stageIds)
+            infos = [tracker.getStageInfo(s) for s in job.stageIds]
+            stages += sum(i is not None and i.numCompletedTasks > 0 for i in infos)
     return stages
 
 
@@ -78,5 +81,5 @@ def test_index_tree_stage_ceiling(spark, trees, tree):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    stages = submitted_stages(sc, group)
-    assert 0 < stages <= STAGE_CEILING, f"{tree}: {stages} stages submitted"
+    stages = stages_run(sc, group)
+    assert 0 < stages <= STAGE_CEILING, f"{tree}: {stages} stages ran"
