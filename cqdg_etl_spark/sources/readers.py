@@ -54,57 +54,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same pushdown/pruning properties as parquet (ORC
-    carries stripe-level min/max + bloom indexes; Spark's vectorized
-    ORC reader applies predicate pushdown and column pruning)."""
-    return spark.read.orc(path)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str | None = None,
-    sep: str = ",",
-    header: bool = True,
-) -> DataFrame:
-    """General CSV scan with an EXPLICIT schema (typed columns, single
-    pass). ``inferSchema`` is deliberately not exposed: at 100 TB,
-    inference reads the whole input once before the real scan —
-    callers must declare the schema (the all-string reference-parity
-    shape lives in ``read_tsv``)."""
-    reader = spark.read.options(sep=sep, header=header)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.csv(path)
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str,
-    schema: T.StructType | str | None = None,
-) -> DataFrame:
-    """XML scan via Spark 4's NATIVE xml data source (the spark-xml
-    donation — no external package): one row per ``row_tag`` element,
-    attributes surfaced as ``_attr`` columns. Same explicit-schema
-    policy as ``read_csv`` — without one, inference parses the input
-    twice, which is disqualifying at scale."""
-    reader = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
-
-
-def read_text(
-    spark: SparkSession, path: str, whole_file: bool = False
-) -> DataFrame:
-    """Raw text scan: one string row per line (``value`` column), or one
-    row per FILE with ``wholetext`` — the ingestion shape for
-    unstructured training-corpus documents before any parsing."""
-    return spark.read.text(path, wholetext=whole_file)
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one of the harness testdata tables from an sf directory."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -30,39 +30,6 @@ def write_partitioned_json(df: DataFrame, path: str, partition_by: Sequence[str]
     df.write.partitionBy(*partition_by).mode("overwrite").json(path)
 
 
-def write_orc(df: DataFrame, path: str, partition_by: Sequence[str] = ()) -> None:
-    """ORC sink (zlib default) — columnar alternative where the reading
-    stack is Hive/ORC-native; same partitioned-layout contract as the
-    parquet sink."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def write_csv(
-    df: DataFrame, path: str, sep: str = ",", header: bool = True
-) -> None:
-    """Parallel CSV sink (one file per partition)."""
-    df.write.mode("overwrite").options(sep=sep, header=header).csv(path)
-
-
-def write_xml(
-    df: DataFrame, path: str, row_tag: str, root_tag: str = "rows"
-) -> None:
-    """XML sink via Spark 4's native xml source — one ``row_tag``
-    element per row, parallel one-file-per-partition layout (XML is an
-    interchange format here, not an analytics layout; round-trips with
-    ``read_xml``)."""
-    (
-        df.write.mode("overwrite")
-        .format("xml")
-        .option("rowTag", row_tag)
-        .option("rootTag", root_tag)
-        .save(path)
-    )
-
-
 def write_range_sorted_parquet(
     df: DataFrame,
     path: str,
@@ -78,7 +45,7 @@ def write_range_sorted_parquet(
     to a handful of row groups at scan time — the cheap, format-native
     alternative to an index, and the layout that makes a 100 TB table
     selectively readable. (Verified by reading footer statistics in
-    tests/test_bucketing.py.)
+    tests/test_sources_roundtrip.py.)
     """
     cols = list(sort_cols)
     parted = (
@@ -87,42 +54,6 @@ def write_range_sorted_parquet(
         else df.repartitionByRange(*cols)
     )
     parted.sortWithinPartitions(*cols).write.mode("overwrite").parquet(path)
-
-
-def compact_parquet(
-    spark,
-    src_path: str,
-    dest_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Compact a small-file parquet dataset into ~``target_file_bytes``
-    files at ``dest_path``; returns the output file count.
-
-    The small-files problem is the classic operational failure of
-    incremental ingest (every micro-batch/upsert leaves a sliver; scans
-    then pay per-file open + footer read + scheduler overhead — at
-    100 TB a million 1 MB files is a cluster-killer). Compaction reads
-    the dataset once and rewrites it with the file count derived from
-    the ACTUAL on-disk bytes (Hadoop FS content summary — works for any
-    supported filesystem, not just local), so output files land near
-    the parquet sweet spot regardless of incoming slivers.
-
-    Writes to a NEW path: atomic swap/retention is table-format
-    territory (the foreachBatch upsert sink covers transactional
-    overwrite); this utility stays a pure rewrite.
-    """
-    import math
-
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = p.getFileSystem(conf)
-    total_bytes = fs.getContentSummary(p).getLength()
-    n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.parquet(src_path)
-    df.coalesce(n_files).write.mode("overwrite").parquet(dest_path)
-    return n_files
 
 
 def write_parquet_observed(

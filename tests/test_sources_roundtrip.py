@@ -1,82 +1,47 @@
-"""ORC and typed-CSV source/sink roundtrips: write a testdata table,
-read it back, assert value + schema equivalence with the parquet
-original (and, for ORC, that predicate pushdown reaches the scan)."""
+"""Parquet sink properties: range-sorted files with disjoint footer
+statistics, single-pass metrics observed during a write, and a
+``mergeSchema`` read across batches whose schemas differ."""
 
 from __future__ import annotations
 
 import tempfile
 
-from pyspark.sql import functions as F
 
-from cqdg_etl_spark.sources import (
-    read_csv,
-    read_orc,
-    write_csv,
-    write_orc,
-)
-
-
-def _sorted_rows(df, cols):
-    return sorted(tuple(r) for r in df.select(*cols).collect())
-
-
-def test_orc_roundtrip_and_pushdown(spark, sf_dir):
-    src = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    with tempfile.TemporaryDirectory() as d:
-        write_orc(src, f"{d}/nation.orc")
-        back = read_orc(spark, f"{d}/nation.orc")
-        assert back.schema == src.schema
-        cols = src.columns
-        assert _sorted_rows(back, cols) == _sorted_rows(src, cols)
-        plan = (
-            back.filter(F.col("n_regionkey") == 1)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "PushedFilters: [" in plan and "n_regionkey" in plan, plan
-
-
-def test_orc_partitioned_layout(spark, sf_dir):
-    src = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    with tempfile.TemporaryDirectory() as d:
-        write_orc(src, f"{d}/nation.orc", partition_by=["n_regionkey"])
-        back = read_orc(spark, f"{d}/nation.orc")
-        assert back.count() == src.count()
-        # partition pruning: only the matching directory is scanned
-        pruned = back.filter(F.col("n_regionkey") == 1)
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert pruned.count() == src.filter(F.col("n_regionkey") == 1).count()
-        assert "PartitionFilters: [" in plan, plan
-
-
-def test_csv_roundtrip_with_explicit_schema(spark, sf_dir):
-    src = spark.read.parquet(f"{sf_dir}/region.parquet")
-    schema = src.schema
-    with tempfile.TemporaryDirectory() as d:
-        write_csv(src, f"{d}/region.csv")
-        back = read_csv(spark, f"{d}/region.csv", schema=schema)
-        assert back.schema == schema
-        cols = src.columns
-        assert _sorted_rows(back, cols) == _sorted_rows(src, cols)
-
-
-def test_compact_parquet_small_files(spark, sf_dir):
-    """20 sliver files compact to 1; data identical."""
+def test_range_sorted_parquet_rowgroup_stats(spark, sf_dir, tmp_path):
+    """Range-sorted layout: per-file key ranges are disjoint and footer
+    min/max stats are tight — the property scan pruning relies on."""
     import glob
 
-    from cqdg_etl_spark.sources.writers import compact_parquet
+    import pyarrow.parquet as pq
 
-    src = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    with tempfile.TemporaryDirectory() as d:
-        src.repartition(20).write.parquet(f"{d}/slivers")
-        assert len(glob.glob(f"{d}/slivers/part-*")) == 20
-        n = compact_parquet(spark, f"{d}/slivers", f"{d}/compacted")
-        assert n == 1
-        assert len(glob.glob(f"{d}/compacted/part-*")) == 1
-        back = spark.read.parquet(f"{d}/compacted")
-        cols = src.columns
-        assert _sorted_rows(back, cols) == _sorted_rows(src, cols)
+    from cqdg_etl_spark.queries.registry import load
+    from cqdg_etl_spark.sources.writers import write_range_sorted_parquet
+
+    orders = load(spark, sf_dir, "orders")
+    target = str(tmp_path / "orders_sorted")
+    write_range_sorted_parquet(orders, target, ["o_orderdate"], num_files=4)
+
+    spans = []
+    for f in glob.glob(f"{target}/*.parquet"):
+        meta = pq.ParquetFile(f).metadata
+        idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
+        col = idx["o_orderdate"]
+        lo = min(
+            meta.row_group(g).column(col).statistics.min
+            for g in range(meta.num_row_groups)
+        )
+        hi = max(
+            meta.row_group(g).column(col).statistics.max
+            for g in range(meta.num_row_groups)
+        )
+        spans.append((lo, hi))
+    spans.sort()
+    assert len(spans) >= 2
+    for (_, prev_hi), (nxt_lo, _) in zip(spans, spans[1:]):
+        assert prev_hi <= nxt_lo  # disjoint file ranges
+
+    # content survives the rewrite
+    assert spark.read.parquet(target).count() == orders.count()
 
 
 def test_observed_write_single_pass_metrics(spark, sf_dir):
@@ -130,39 +95,3 @@ def test_merge_schema_evolution(spark, sf_dir):
             merged.filter(F.col("ingest_tag").isNull()).count()
             == nation.count()
         )
-
-
-def test_xml_roundtrip_with_explicit_schema(spark, sf_dir):
-    """Spark 4 NATIVE xml source: write one row per element, read back
-    with an explicit schema (no double-pass inference) — values and
-    dtypes must survive."""
-    from cqdg_etl_spark.sources import read_xml, write_xml
-
-    src = spark.read.parquet(f"{sf_dir}/region.parquet")
-    with tempfile.TemporaryDirectory() as d:
-        write_xml(src, f"{d}/region.xml", row_tag="region")
-        back = read_xml(
-            spark,
-            f"{d}/region.xml",
-            row_tag="region",
-            schema=src.schema,
-        )
-        assert back.schema == src.schema
-        cols = src.columns
-        assert _sorted_rows(back, cols) == _sorted_rows(src, cols)
-
-
-def test_text_reader_line_and_wholefile(spark, tmp_path):
-    from cqdg_etl_spark.sources import read_text
-
-    p = tmp_path / "corpus"
-    p.mkdir()
-    (p / "a.txt").write_text("line one\nline two\n")
-    (p / "b.txt").write_text("solo\n")
-    lines = read_text(spark, str(p))
-    assert sorted(r["value"] for r in lines.collect()) == [
-        "line one", "line two", "solo",
-    ]
-    whole = read_text(spark, str(p), whole_file=True)
-    docs = sorted(r["value"] for r in whole.collect())
-    assert docs == ["line one\nline two\n", "solo\n"]

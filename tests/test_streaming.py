@@ -186,38 +186,6 @@ def test_stream_dedup_within_watermark_bounded_superset(spark, sf_dir):
     assert n_keys <= len(got) <= ev.count()
 
 
-def test_foreach_batch_parquet_upsert_idempotent(spark, sf_dir, tmp_path):
-    """Exactly-once table semantics: draining once produces the batch
-    answer; replaying from a FRESH checkpoint (the crash-replay case)
-    rewrites the same partitions to the same content — no duplication."""
-    from pyspark.sql import functions as F
-
-    from cqdg_etl_spark.streaming.sinks import foreach_batch_parquet_upsert
-
-    target = str(tmp_path / "events_by_day")
-
-    def drain(checkpoint: str) -> None:
-        ev = read_event_stream(spark, sf_dir).withColumn(
-            "day", F.date_format("ts", "yyyy-MM-dd")
-        )
-        q = foreach_batch_parquet_upsert(
-            ev, target, str(tmp_path / checkpoint), ["day"]
-        )
-        q.awaitTermination(600)
-
-    drain("ckpt1")
-    first = spark.read.parquet(target)
-    batch = load(spark, sf_dir, "events")
-    assert first.count() == batch.count()
-
-    drain("ckpt2")  # full replay — dynamic overwrite must converge
-    second = spark.read.parquet(target)
-    assert second.count() == batch.count()
-    assert sorted(r["event_id"] for r in second.select("event_id").collect()) == sorted(
-        r["event_id"] for r in batch.select("event_id").collect()
-    )
-
-
 def test_stream_static_enrich_matches_batch(spark, sf_dir):
     """Stream-static broadcast join drains to the batch join answer."""
     df = REGISTRY["ev_stream_enrich_static"].fn(spark, sf_dir)
