@@ -13,7 +13,8 @@ Improvements over the reference, by design:
   ``(study, donor)`` key projections of their entities, not the
   reference's per-donor nested lists (see ``groupings.load_all``);
 - Keycloak registration receives the same distinct internal_file_id set
-  but through a pluggable no-op port (HTTP out of engine scope).
+  through a pluggable port: ``clients.RecordingKeycloak`` records the ids,
+  ``http_clients.HttpKeycloak`` registers them over HTTP.
 """
 
 from __future__ import annotations
