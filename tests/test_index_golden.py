@@ -285,6 +285,49 @@ def test_field_without_values_leaves_every_summary_out(spark, tmp_path):
     ]
     assert all(e.get("key") is not None for e in entries)
 
+
+def write_phenotype_half_fixtures(d: str) -> None:
+    """The 3-donor fixture where PT03's only phenotype is not observed and
+    PT02 gets one phenotype whose HPO code is not in the ontology."""
+    write_clinical_fixtures(d)
+    with open(f"{d}/phenotype.tsv") as fh:
+        rows = [line.rstrip("\n").split("\t") for line in fh]
+    col = rows[0].index("phenotype_observed")
+    for row in rows[1:]:
+        if row[1] == "PT03":
+            row[col] = "No"
+    rows.append(["ST01", "PT02", "PH04", "unlisted sign", "HP:9999999",
+                 "Unlisted sign", "other", "30", "mild", "TRUE"])
+    with open(f"{d}/phenotype.tsv", "w") as fh:
+        fh.writelines("\t".join(row) + "\n" for row in rows)
+
+
+def test_phenotype_half_without_rows_is_absent(spark, tmp_path):
+    """The reference left-joins each phenotype half per donor
+    (ProcessETLUtils.scala:41-106): a donor with no observed phenotype has
+    no ``observed_*`` key at all, not an empty array, and a donor whose only
+    phenotype matches no HPO term has none of the four keys."""
+    run_release(spark, write_phenotype_half_fixtures, str(tmp_path))
+    donors = {
+        d["submitter_donor_id"]: d for d in read_tree(f"{tmp_path}/indexes/donors")
+    }
+    halves = ("observed_phenotype_tagged", "not_observed_phenotype_tagged",
+              "observed_phenotypes", "non_observed_phenotypes")
+    pt03 = {k for k in halves if k in donors["PT03"]}
+    assert pt03 == {"not_observed_phenotype_tagged", "non_observed_phenotypes"}
+    pt02 = donors["PT02"]
+    assert [k for k in halves if k in pt02] == []
+    available = {
+        a["key"]: a["available"] for a in pt02["summary"]["clinical_data_available"]
+    }
+    assert available["phenotype"] is False
+    st01 = {d["study_id"]: d for d in read_tree(f"{tmp_path}/indexes/studies")}["ST01"]
+    counted = {
+        a["key"]: a["donors"] for a in st01["summary"]["clinical_data_available"]
+    }
+    assert counted["phenotype"] == 2  # PT01 and PT02
+
+
 if __name__ == "__main__":
     from cqdg_etl_spark.session import get_spark
 
