@@ -7,6 +7,12 @@ in/exclusions kept verbatim. The five summary-only frames are key
 projections: the reference nests each entity per (study, donor)
 (ProcessETLUtils.scala:427-436), but only the availability summary reads
 them, and it needs nothing but the keys (see ``summary._clinical_rows``).
+
+The ontology frames differ from the reference on purpose: HPO is enriched
+once for both observed and not-observed phenotypes, and each diagnosis is
+tagged with its MONDO and ICD terms on its own row instead of joining the
+tagged terms back by diagnosis key (see ``build_diagnoses`` for what that
+changes).
 """
 
 from __future__ import annotations
@@ -16,10 +22,11 @@ from pyspark.sql import functions as F
 
 from cqdg_etl_spark.functions.columns import age_at_recruitment, not_null_col
 from cqdg_etl_spark.pipeline.ontology import (
-    EnrichedTerms,
+    KEYS,
     add_ancestors_to_term,
     phenotype_observed_bool,
     split_icd_chapter,
+    tag_terms,
 )
 
 
@@ -170,7 +177,7 @@ def _tagged_phenotype_struct(observed: bool) -> F.Column:
     """Struct orders differ between observed / not-observed in the
     reference (ProcessETLUtils.scala:70-99) — kept verbatim."""
     common = [
-        F.col("phenotype_id"),
+        F.col("id").alias("phenotype_id"),
         F.col("name"),
         F.col("parents"),
         F.col("display_name"),
@@ -194,67 +201,65 @@ def _tagged_phenotype_struct(observed: bool) -> F.Column:
     return F.struct(*fields)
 
 
+def _half(value: F.Column, observed: bool) -> F.Column:
+    """The ``value``s of one phenotype half; NULL, not [], when the half
+    has none, as the reference's left join of that half gives."""
+    kept = F.collect_list(F.when(F.col("phenotype_observed_bool") == observed, value))
+    return F.when(F.size(kept) > 0, kept)
+
+
 def build_phenotypes(phenotype: DataFrame, hpo_terms: DataFrame) -> DataFrame:
     """Observed + non-observed phenotype enrichment per (study, donor)
-    (reference: ProcessETLUtils.scala:41-106)."""
+    (reference: ProcessETLUtils.scala:41-106).
+
+    The reference enriches each half on its own and joins four per-donor
+    pieces. Here HPO is enriched once, grouped by the observed flag as well,
+    and each half is split out of one groupBy for the tagged rows and one
+    for the grouped ancestors: the distinct (study, donor) base plus two
+    left joins.
+    """
     clean = (
         phenotype.withColumnRenamed("age_at_phenotype", "age_at_event")
         .select("*", phenotype_observed_bool())
         .drop("phenotype_observed")
     )
-    observed = add_ancestors_to_term(
+    hpo = add_ancestors_to_term(
         "phenotype_HPO_code",
-        "observed_phenotypes",
+        "phenotypes",
         "internal_phenotype_id",
-        clean.filter(F.col("phenotype_observed_bool")),
+        clean,
         hpo_terms,
+        keys=[*KEYS, "phenotype_observed_bool"],
     )
-    not_observed = add_ancestors_to_term(
-        "phenotype_HPO_code",
-        "non_observed_phenotypes",
-        "internal_phenotype_id",
-        clean.filter(~F.col("phenotype_observed_bool")),
-        hpo_terms,
+    tagged = hpo.tagged.groupBy(*KEYS).agg(
+        _half(_tagged_phenotype_struct(True), True).alias("observed_phenotype_tagged"),
+        _half(_tagged_phenotype_struct(False), False).alias("not_observed_phenotype_tagged"),
     )
-
-    def tagged_grouped(e: EnrichedTerms, alias: str, obs: bool) -> DataFrame:
-        return (
-            e.tagged.withColumnRenamed("id", "phenotype_id")
-            .groupBy("study_id", "submitter_donor_id")
-            .agg(F.collect_list(_tagged_phenotype_struct(obs)).alias(alias))
-        )
-
+    grouped = hpo.grouped.groupBy(*KEYS).agg(
+        F.flatten(_half(F.col("phenotypes"), True)).alias("observed_phenotypes"),
+        F.flatten(_half(F.col("phenotypes"), False)).alias("non_observed_phenotypes"),
+    )
     return (
-        clean.select("study_id", "submitter_donor_id")
+        clean.select(*KEYS)
         .distinct()
-        .join(
-            tagged_grouped(observed, "observed_phenotype_tagged", True),
-            ["study_id", "submitter_donor_id"],
-            "left",
-        )
-        .join(
-            tagged_grouped(not_observed, "not_observed_phenotype_tagged", False),
-            ["study_id", "submitter_donor_id"],
-            "left",
-        )
-        .join(observed.grouped, ["study_id", "submitter_donor_id"], "left")
-        .join(not_observed.grouped, ["study_id", "submitter_donor_id"], "left")
+        .join(tagged, KEYS, "left")
+        .join(grouped, KEYS, "left")
     )
 
 
-def _tagged_diagnosis_struct(dx_alias: str) -> F.Column:
-    """tagged_mondo / tagged_icd payload
-    (reference: ProcessETLUtils.scala:134-162)."""
+def _tagged_diagnosis_struct(alias: str) -> F.Column:
+    """tagged_mondo / tagged_icd payload from the tagged term in ``alias``
+    (reference: ProcessETLUtils.scala:134-162). On a miss every term field
+    is NULL and age_at_event is [null], as the reference's left join gives."""
+    term = F.col(alias)
+    fields = ["name", "parents", "display_name", "main_category"]
     return F.struct(
-        F.col("id").alias("phenotype_id"),
-        F.col("name"),
-        F.col("parents"),
-        F.col("display_name"),
-        F.col("main_category"),
-        F.array("age_at_event").alias("age_at_event"),
-        F.col("is_leaf"),
-        F.col("is_tagged"),
-        F.col(f"{dx_alias}.internal_diagnosis_id").alias("internal_diagnosis_id"),
+        term["id"].alias("phenotype_id"),
+        *[term[f].alias(f) for f in fields],
+        F.array(F.when(term.isNotNull(), F.col("age_at_diagnosis"))).alias("age_at_event"),
+        term["is_leaf"].alias("is_leaf"),
+        term["is_tagged"].alias("is_tagged"),
+        F.col("internal_diagnosis_id"),
     )
 
 
@@ -267,33 +272,33 @@ def build_diagnoses(
 ) -> DataFrame:
     """Diagnoses tagged with MONDO + ICD ontologies, nested with
     treatments/follow-ups, plus the per-donor mondo/icd ancestor arrays
-    (reference: ProcessETLUtils.scala:108-173)."""
+    (reference: ProcessETLUtils.scala:108-173).
+
+    Each diagnosis is tagged on its own row, where the reference joins the
+    tagged terms back by (study, donor, submitter_diagnosis_id). This
+    diverges on purpose: there, a row whose key is duplicated multiplies
+    and a row with a NULL key loses its tags; here neither happens.
+    """
+    icd_terms = split_icd_chapter(icd_terms)
     dx_aged = diagnosis.withColumnRenamed("age_at_diagnosis", "age_at_event")
     mondo = add_ancestors_to_term(
         "diagnosis_mondo_code", "mondo", "internal_diagnosis_id", dx_aged, mondo_terms
     )
     icd = add_ancestors_to_term(
+        "diagnosis_ICD_code", "icd", "internal_diagnosis_id", dx_aged, icd_terms
+    )
+    tagged = tag_terms(
         "diagnosis_ICD_code",
-        "icd",
-        "internal_diagnosis_id",
-        dx_aged,
-        split_icd_chapter(icd_terms),
+        tag_terms("diagnosis_mondo_code", diagnosis, mondo_terms, "tagged_mondo"),
+        icd_terms,
+        "tagged_icd",
     )
-    keys = ["study_id", "submitter_donor_id", "submitter_diagnosis_id"]
-    with_mondo = (
-        diagnosis.alias("dx")
-        .join(mondo.tagged.alias("m"), keys, "left")
-        .select("dx.*", _tagged_diagnosis_struct("dx").alias("tagged_mondo"))
-    )
-    tagged = (
-        with_mondo.alias("dx2")
-        .join(icd.tagged.alias("i"), keys, "left")
-        .select("dx2.*", _tagged_diagnosis_struct("dx2").alias("tagged_icd"))
-    )
+    for alias in ("tagged_mondo", "tagged_icd"):
+        tagged = tagged.withColumn(alias, _tagged_diagnosis_struct(alias))
     return (
         load_diagnoses(tagged, treatment, follow_up)
-        .join(mondo.grouped, ["study_id", "submitter_donor_id"], "left")
-        .join(icd.grouped, ["study_id", "submitter_donor_id"], "left")
+        .join(mondo.grouped, KEYS, "left")
+        .join(icd.grouped, KEYS, "left")
     )
 
 
@@ -314,7 +319,6 @@ def load_all(
         ontologies["mondo"],
         ontologies["icd"],
     )
-    keys = ["study_id", "submitter_donor_id"]
     return {
         "donor": donor,
         "diagnosisPerDonorAndStudy": diagnoses,
@@ -324,9 +328,9 @@ def load_all(
         ),
         "file": entities["file"],
         # Summary-only frames: their keys are all the summary reads.
-        "treatmentsPerDonorAndStudy": entities["treatment"].select(*keys),
-        "exposuresPerDonorAndStudy": entities["exposure"].select(*keys),
-        "followUpsPerDonorAndStudy": entities["follow-up"].select(*keys),
-        "familyHistoryPerDonorAndStudy": entities["family-history"].select(*keys),
-        "familyRelationshipPerDonorAndStudy": entities["family"].select(*keys),
+        "treatmentsPerDonorAndStudy": entities["treatment"].select(*KEYS),
+        "exposuresPerDonorAndStudy": entities["exposure"].select(*KEYS),
+        "followUpsPerDonorAndStudy": entities["follow-up"].select(*KEYS),
+        "familyHistoryPerDonorAndStudy": entities["family-history"].select(*KEYS),
+        "familyRelationshipPerDonorAndStudy": entities["family"].select(*KEYS),
     }

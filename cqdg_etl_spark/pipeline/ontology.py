@@ -2,19 +2,21 @@
 
 Given an entity frame carrying an ontology code column (HPO / MONDO /
 ICD-10) and the ontology term table
-``{id, name, parents: array<string>, ancestors: array<struct>, is_leaf}``,
-produce:
+``{id, name, parents: array<string>, ancestors: array<struct>, is_leaf}``:
 
-1. ``grouped``: per (study, donor) the union of tagged terms and all
-   their exploded ancestors, each with its normalized age_at_event array
-   — nested as array<struct> (the donor-document "mondo"/"icd"/
-   "observed_phenotypes" fields);
-2. ``tagged``: the directly-tagged terms with their main category
-   (the first ancestor, in array order, that an ontology-specific
-   predicate selects), computed on the row without an explode or join.
+1. ``tag_terms`` puts on each row, in one struct column, the term its code
+   names: the term's columns plus display_name, ``is_tagged`` and the main
+   category (the first ancestor, in array order, that an
+   ontology-specific predicate selects). The struct is NULL when the code
+   is not in the ontology. The category depends on the term alone, so it
+   is computed once per term, on the term table;
+2. ``add_ancestors_to_term`` groups, per ``keys`` (by default study and
+   donor), the union of tagged terms and all their exploded ancestors,
+   each with its normalized age_at_event array, nested as array<struct>
+   (the donor-document "mondo"/"icd"/phenotype fields).
 
 Scale: the term table (ontologies are ≤ ~100k rows) is broadcast; the
-only shuffles are the two groupBys keyed on (study, donor[, term]).
+only shuffles are the two groupBys keyed on ``keys`` (then the term).
 """
 
 from __future__ import annotations
@@ -28,22 +30,17 @@ from pyspark.sql import functions as F
 from cqdg_etl_spark.functions.columns import display_name
 
 ICD_BLOCK_RE = "^[A-Z][0-9]{2}-[A-Z][0-9]{2}"
+KEYS = ["study_id", "submitter_donor_id"]
 
 
-def main_category_predicate(code_col: str) -> tuple[Callable[[Column], Column], str]:
-    """Ontology-specific root-category rule over one ancestor struct +
-    owning entity type (reference: ProcessETLUtils.scala:240-248)."""
+def main_category_predicate(code_col: str) -> Callable[[Column], Column]:
+    """Ontology-specific root-category rule over one ancestor struct
+    (reference: ProcessETLUtils.scala:240-248)."""
     if code_col == "phenotype_HPO_code":
-        return (
-            lambda a: F.array_contains(a["parents"], "Phenotypic abnormality (HP:0000118)"),
-            "phenotype",
-        )
+        return lambda a: F.array_contains(a["parents"], "Phenotypic abnormality (HP:0000118)")
     if code_col == "diagnosis_mondo_code":
-        return (
-            lambda a: F.array_contains(a["parents"], "disease or disorder (MONDO:0000001)"),
-            "diagnosis",
-        )
-    return (lambda a: a["id"].rlike(ICD_BLOCK_RE), "diagnosis")
+        return lambda a: F.array_contains(a["parents"], "disease or disorder (MONDO:0000001)")
+    return lambda a: a["id"].rlike(ICD_BLOCK_RE)
 
 
 def split_icd_chapter(icd_terms: DataFrame) -> DataFrame:
@@ -70,10 +67,33 @@ def phenotype_observed_bool() -> Column:
     )
 
 
+def tag_terms(code_col: str, data: DataFrame, terms: DataFrame, alias: str) -> DataFrame:
+    """``data`` left-joined to the broadcast term table, with the matched
+    term in the struct column ``alias`` (NULL when the code is not in the
+    ontology) (reference: ProcessETLUtils.scala:238).
+
+    Main category: the first ancestor, in array order, that satisfies the
+    ontology's rule (reference: ProcessETLUtils.scala:406-425, which
+    explodes, filters and takes first() per tagged term, then joins it back
+    on (study, donor, submitter id, term)). try_element_at gives NULL, not an
+    error, when no ancestor qualifies. Unlike the reference's equi-join
+    back, a row with a NULL key keeps its main category.
+    """
+    main = F.try_element_at(F.filter("ancestors", main_category_predicate(code_col)), F.lit(1))
+    term = F.struct(
+        *terms.columns,
+        display_name(F.col("name"), F.col("id")).alias("display_name"),
+        F.lit(True).alias("is_tagged"),
+        F.concat(main["name"], F.lit(" ("), main["id"], F.lit(")")).alias("main_category"),
+    )
+    tags = terms.select(term.alias(alias))
+    return data.join(F.broadcast(tags), data[code_col] == tags[alias]["id"], "left_outer")
+
+
 @dataclass
 class EnrichedTerms:
-    grouped: DataFrame  # (study_id, submitter_donor_id, <term_name>: array<struct>)
-    tagged: DataFrame  # tagged terms + main_category string
+    grouped: DataFrame  # (*keys, <term_name>: array<struct>)
+    tagged: DataFrame  # matched rows of data + the term's columns
 
 
 def add_ancestors_to_term(
@@ -82,97 +102,45 @@ def add_ancestors_to_term(
     internal_id_col: str,
     data: DataFrame,
     terms: DataFrame,
+    keys: list[str] = KEYS,
 ) -> EnrichedTerms:
     """(reference: ProcessETLUtils.scala:233-340)
 
-    ``data`` must carry study_id, submitter_donor_id, submitter_<type>_id,
-    age_at_event, <code_col>, <internal_id_col>.
+    ``data`` must carry ``keys``, age_at_event, <code_col> and
+    <internal_id_col>.
     """
-    condition, etype = main_category_predicate(code_col)
-    sub_id = f"submitter_{etype}_id"
-
-    joined = data.join(F.broadcast(terms), data[code_col] == terms["id"], "left_outer")
-
-    # Main category: the first ancestor, in array order, that satisfies the
-    # ontology's rule (reference: ProcessETLUtils.scala:406-425, which
-    # explodes, filters and takes first() per tagged term). try_element_at
-    # gives NULL, not an error, when no ancestor qualifies. Unlike the
-    # reference's equi-join back on (study, donor, submitter id, term), a
-    # row with a NULL key keeps its main category.
-    main = F.try_element_at(F.filter("ancestors", condition), F.lit(1))
     tagged = (
-        joined.select(
-            "study_id",
-            sub_id,
-            "submitter_donor_id",
-            "id",
-            "name",
-            display_name(F.col("name"), F.col("id")).alias("display_name"),
-            "parents",
-            "age_at_event",
-            internal_id_col,
-            "is_leaf",
-            F.lit(True).alias("is_tagged"),
-            F.concat(main["name"], F.lit(" ("), main["id"], F.lit(")")).alias(
-                "main_category"
-            ),
-        )
-        .filter(F.col("id").isNotNull())
+        tag_terms(code_col, data, terms, "term")
+        .filter(F.col("term").isNotNull())
+        .select(*data.columns, "term.*")
     )
-
-    ancestors = (
-        joined.select(
-            "study_id",
-            "submitter_donor_id",
-            "age_at_event",
-            internal_id_col,
-            F.col("id").alias("_term_id"),
-            F.explode_outer("ancestors").alias("anc"),
-        )
-        .filter(F.col("_term_id").isNotNull())
-        .select(
-            "study_id",
-            "submitter_donor_id",
-            F.col("anc.id").alias("id"),
-            F.col("anc.name").alias("name"),
-            display_name(F.col("anc.name"), F.col("anc.id")).alias("display_name"),
-            F.col("anc.parents").alias("parents"),
-            "age_at_event",
-            internal_id_col,
-        )
-        .withColumn("is_leaf", F.lit(False))
-        .withColumn("is_tagged", F.lit(False))
+    row = [*keys, "age_at_event", internal_id_col]
+    ancestors = tagged.select(*row, F.explode_outer("ancestors").alias("anc")).select(
+        *row,
+        "anc.id",
+        "anc.name",
+        "anc.parents",
+        F.lit(False).alias("is_leaf"),
+        F.lit(False).alias("is_tagged"),
     )
-
-    combined = tagged.drop(sub_id, "main_category").unionByName(ancestors)
+    node = ["id", "name", "parents", "is_leaf", "is_tagged"]
 
     # Normalize ages per distinct term: collect, flatten, sort, dedupe
     # (reference: ProcessETLUtils.scala:299-318 pattern A7).
+    ages = F.flatten(F.collect_list(F.array("age_at_event")))
     per_term = (
-        combined.groupBy(
-            "study_id",
-            "submitter_donor_id",
-            "id",
-            "name",
-            "display_name",
-            "parents",
-            "is_leaf",
-            "is_tagged",
-            internal_id_col,
-        )
-        .agg(F.collect_list(F.array("age_at_event")).alias("_ages_raw"))
-        .withColumn(
-            "age_at_event", F.array_distinct(F.sort_array(F.flatten("_ages_raw")))
-        )
-        .drop("_ages_raw")
+        tagged.select(*row, *node)
+        .unionByName(ancestors)
+        .groupBy(*keys, internal_id_col, *node)
+        .agg(F.array_distinct(F.sort_array(ages)).alias("age_at_event"))
     )
 
-    grouped = per_term.groupBy("study_id", "submitter_donor_id").agg(
+    grouped = per_term.groupBy(*keys).agg(
         F.collect_list(
             F.struct(
                 F.col("id").alias("phenotype_id"),
                 "name",
-                "display_name",
+                display_name(F.col("name"), F.col("id")).alias("display_name"),
                 "parents",
                 "age_at_event",
                 internal_id_col,
@@ -181,9 +149,4 @@ def add_ancestors_to_term(
             )
         ).alias(term_name)
     )
-
-    # Reference quirk kept: the tagged frame always drops the literal
-    # column "internal_diagnosis_id" (ProcessETLUtils.scala:337) — a
-    # no-op for phenotype enrichment, which therefore KEEPS its
-    # internal_phenotype_id in the tagged output.
-    return EnrichedTerms(grouped=grouped, tagged=tagged.drop("internal_diagnosis_id"))
+    return EnrichedTerms(grouped=grouped, tagged=tagged)

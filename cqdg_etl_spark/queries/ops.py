@@ -1010,8 +1010,7 @@ def j_bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ops_zorder_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton z-value over (o_custkey, days(o_orderdate)) — the sort
-    key behind multi-dimension data skipping (operators/zorder.py; the
-    clustered writer itself is exercised in tests/test_bucketing.py).
+    key behind multi-dimension data skipping (operators/zorder.py).
     Pure expression fold, no shuffle."""
     from cqdg_etl_spark.operators.zorder import zorder_key
 

@@ -1,15 +1,19 @@
-"""Stage ceiling for writing the ``donors`` and ``studies`` index trees.
+"""Stage ceilings for the ontology frames and the ``donors`` and
+``studies`` index trees.
 
 On this pipeline the cost of a release pass follows the number of Spark
-stages it runs, and the per-donor / per-study summaries used to hold most
-of them. Each tree of the 3-donor fixture is written under its own job
-group, with the shared frames already cached, and the stages its jobs ran
-are counted through ``statusTracker``. A job also lists the lineage
-stages of a cached frame or a reused shuffle; those are skipped, finish no
-task and are not counted.
+stages it runs. The per-donor / per-study summaries used to hold most of
+them; the ontology-enriched diagnoses and phenotypes frames now do. On the
+3-donor fixture, those two frames are cached under one job group, and each
+tree is written under its own, with the shared frames already cached. The
+stages each group's jobs ran are counted through ``statusTracker``. A job
+also lists the lineage stages of a cached frame or a reused shuffle; those
+are skipped, finish no task and are not counted.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import pytest
 
@@ -29,10 +33,22 @@ from cqdg_etl_spark.pipeline.preprocess import PreProcessETL
 from cqdg_etl_spark.sources import write_partitioned_json
 
 STAGE_CEILING = 35
+ONTOLOGY_STAGE_CEILING = 40
+ONTOLOGY_FRAMES = ("diagnosisPerDonorAndStudy", "phenotypesPerStudyIdAndDonor")
+
+
+@contextmanager
+def job_group(sc, group: str):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 @pytest.fixture(scope="module")
-def trees(spark, tmp_path_factory):
+def release(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("stages"))
     write_clinical_fixtures(f"{root}/raw")
     write_ontology_fixtures(f"{root}/ontology")
@@ -45,7 +61,27 @@ def trees(spark, tmp_path_factory):
         spark, f"{root}/with-ids", f"{root}/ontology", f"{root}/indexes",
         keycloak=RecordingKeycloak(enabled=False),
     )
-    entities, ontologies = etl.extract()
+    return etl, *etl.extract(), root
+
+
+@pytest.fixture(scope="module")
+def ontology_stages(spark, release):
+    """Stages that ran caching the ontology frames, counted before
+    ``trees`` caches every shared frame."""
+    _, entities, ontologies, _ = release
+    shared = load_all(entities, ontologies)
+    sc = spark.sparkContext
+    with job_group(sc, "stage-ceiling-ontology"):
+        for name in ONTOLOGY_FRAMES:
+            shared[name].cache().count()
+    yield stages_run(sc, "stage-ceiling-ontology")
+    for name in ONTOLOGY_FRAMES:
+        shared[name].unpersist()
+
+
+@pytest.fixture(scope="module")
+def trees(spark, release, ontology_stages):
+    etl, entities, ontologies, root = release
     # Same plans as the frames transform() caches, so it finds them cached.
     shared = list(load_all(entities, ontologies).values())
     for df in shared:
@@ -75,11 +111,13 @@ def test_index_tree_stage_ceiling(spark, trees, tree):
     frames, out = trees
     sc = spark.sparkContext
     group = f"stage-ceiling-{tree}"
-    sc.setJobGroup(group, group)
-    try:
+    with job_group(sc, group):
         write_partitioned_json(frames[tree], f"{out}/{tree}", INDEX_PARTITIONS)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
     stages = stages_run(sc, group)
     assert 0 < stages <= STAGE_CEILING, f"{tree}: {stages} stages ran"
+
+
+def test_ontology_frames_stage_ceiling(ontology_stages):
+    assert 0 < ontology_stages <= ONTOLOGY_STAGE_CEILING, (
+        f"{ontology_stages} stages ran"
+    )
