@@ -8,8 +8,9 @@ Two stages mirroring the reference engine's semantics (SURVEY.md §3):
   document indexes (studies / donors / files) as partitioned JSON.
 
 Differences from the reference, by design (all documented inline):
-- ID resolution is pure-Spark deterministic by default (no HTTP
-  collect-to-driver round trip); the HTTP client remains a pluggable port.
+- ID resolution is pure-Spark deterministic (no HTTP collect-to-driver
+  round trip); the dictionary, ID server and Keycloak are pluggable ports
+  (clients.py) with local defaults.
 - file_size is hash-derived deterministic, not Random.nextDouble.
 - The 10 shared intermediate frames are cached before the 3 index builds
   (the reference recomputes them per index).

@@ -2,15 +2,17 @@
 
 The reference talks to three HTTP services: Lectern (dictionary schemas),
 an ID server (hash → internal id), and Keycloak (authz resource per
-file). Each is a Protocol here with a local, scale-safe default:
+file). Each is a Protocol here, which is where a test or a deployment
+plugs in its own implementation, and each has one local default:
 
 - Dictionary: load from a JSON fixture (same shape as Lectern's answer).
 - ID server: NOT a service call — the default implementation resolves
   ids deterministically ON-EXECUTOR (internal_id = entity_sha1prefix),
   because the reference's collect-to-driver + HTTP POST
   (PreProcessUtils.scala:93-100) cannot scale past driver memory.
-- Keycloak: no-op recorder; the process stage still computes the exact
-  distinct-internal-file-id set the reference would register.
+- Keycloak: a recorder; the process stage hands it the exact
+  internal_file_id set of the files tree, the set the reference would
+  register.
 """
 
 from __future__ import annotations
@@ -77,20 +79,6 @@ class DeterministicIdResolver:
             "internal_id",
             F.concat_ws("_", F.lit(entity), F.substring("cqdg_hash", 1, 16)),
         )
-
-
-class MappingIdResolver:
-    """Resolve through an explicit hash→id map frame (what the HTTP ID
-    server effectively returns) — broadcast-joined back, mirroring
-    PreProcessUtils.scala:96-98 without the driver collect."""
-
-    def __init__(self, mapping: DataFrame):
-        self.mapping = mapping  # columns: hash, internal_id
-
-    def resolve(self, df: DataFrame, entity: str) -> DataFrame:
-        return df.join(
-            F.broadcast(self.mapping), df.cqdg_hash == self.mapping.hash
-        ).drop("hash")
 
 
 class RecordingKeycloak:

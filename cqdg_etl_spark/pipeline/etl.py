@@ -12,9 +12,12 @@ Improvements over the reference, by design:
   exposures, follow-ups, family history, family relationships) are
   ``(study, donor)`` key projections of their entities, not the
   reference's per-donor nested lists (see ``groupings.load_all``);
-- Keycloak registration receives the same distinct internal_file_id set
-  through a pluggable port: ``clients.RecordingKeycloak`` records the ids,
-  ``http_clients.HttpKeycloak`` registers them over HTTP.
+- Keycloak registration (the ``clients.Keycloak`` port) receives the
+  distinct internal_file_id set of the files tree, taken from the file,
+  study and donor rows by ``published_file_ids``, so the collect does not
+  run the tree's plan;
+- the release metadata is read from the study rows, where pre-process
+  stamped it, not collected to the driver and stamped again.
 """
 
 from __future__ import annotations
@@ -31,31 +34,30 @@ from cqdg_etl_spark.pipeline.indexes.data_access import data_access_by_entity_ty
 from cqdg_etl_spark.pipeline.indexes.donor import build_donor_index
 from cqdg_etl_spark.pipeline.indexes.file import build_file_index
 from cqdg_etl_spark.pipeline.indexes.study import build_study_index
-from cqdg_etl_spark.pipeline.models import Metadata
+from cqdg_etl_spark.pipeline.models import RELEASE_COLUMNS
+from cqdg_etl_spark.pipeline.preprocess import ENTITY_DATASETS
 from cqdg_etl_spark.sources import read_ndjson, read_parquet, write_partitioned_json
 
-ENTITY_PARQUETS = [
-    "study",
-    "donor",
-    "family",
-    "family-history",
-    "exposure",
-    "diagnosis",
-    "treatment",
-    "follow-up",
-    "phenotype",
-    "biospecimen",
-    "sample_registration",
-    "file",
-]
 ONTOLOGIES = ["hpo", "mondo", "icd", "duo_code"]
 
-INDEX_PARTITIONS = [
-    "study_id",
-    "dictionary_version",
-    "study_version",
-    "study_version_creation_date",
-]
+INDEX_PARTITIONS = ["study_id", *RELEASE_COLUMNS]
+
+
+def published_file_ids(study: DataFrame, file: DataFrame, donor: DataFrame) -> DataFrame:
+    """The distinct ``internal_file_id`` of the files tree, without its plan.
+
+    ``build_file_index`` inner-joins the file rows to ``study`` on study_id
+    and, on (study_id, file_name), to the file rows whose donor is in
+    ``donor``; its other joins are left joins. The same joins as semi-joins
+    keep exactly the rows the tree writes, and drop NULL keys as they do.
+    """
+    with_donor = file.join(donor, "submitter_donor_id", "left_semi")
+    return (
+        file.join(study, "study_id", "left_semi")
+        .join(with_donor, ["study_id", "file_name"], "left_semi")
+        .select("internal_file_id")
+        .distinct()
+    )
 
 
 @dataclass
@@ -69,7 +71,7 @@ class ProcessETL:
     def extract(self) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
         entities = {
             name: read_parquet(self.spark, f"{self.input_dir}/{name}-with-ids")
-            for name in ENTITY_PARQUETS
+            for name in ENTITY_DATASETS
         }
         ontologies = {
             name: read_ndjson(self.spark, f"{self.ontology_dir}/{name}_terms.json")
@@ -77,21 +79,9 @@ class ProcessETL:
         }
         return entities, ontologies
 
-    def extract_metadata(self, study: DataFrame) -> Metadata:
-        row = (
-            study.select(
-                "study_version", "study_version_creation_date", "dictionary_version"
-            )
-            .distinct()
-            .first()
-        )
-        return Metadata(row[0], row[1], row[2])
-
     def transform(
         self, entities: dict[str, DataFrame], ontologies: dict[str, DataFrame]
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        metadata = self.extract_metadata(entities["study"])
-
         shared = load_all(entities, ontologies)
         # The 3 index builders each consume most of these frames; cache
         # once instead of recomputing per index (reference recomputes).
@@ -113,16 +103,13 @@ class ProcessETL:
             .withColumn("short_name", not_null_col(F.col("short_name")))
         )
 
-        studies = build_study_index(study_df, metadata, shared)
-        donors = build_donor_index(study_df, metadata, shared)
-        files = build_file_index(study_df, metadata, shared)
+        studies = build_study_index(study_df, shared)
+        donors = build_donor_index(study_df, shared)
+        files = build_file_index(study_df, shared)
 
         if self.keycloak.is_enabled():
-            ids = {
-                r[0]
-                for r in files.select("internal_file_id").distinct().collect()
-            }
-            self.keycloak.create_resources(ids)
+            published = published_file_ids(study_df, shared["file"], shared["donor"])
+            self.keycloak.create_resources({r[0] for r in published.collect()})
 
         return studies, donors, files
 

@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from cqdg_etl_spark.pipeline.models import RELEASE_COLUMNS
 
 
 def file_size(file_name: Column) -> Column:
@@ -19,3 +21,10 @@ def file_size(file_name: Column) -> Column:
         float(1 << 32)
     )
     return F.when(file_name.isNotNull(), F.lit(1.0) + 24.0 * frac).alias("file_size")
+
+
+def with_release_columns(doc: DataFrame) -> DataFrame:
+    """``doc`` with the release metadata columns appended last, read from
+    the document's one-element ``study`` array (pre-process stamped them
+    on the study rows)."""
+    return doc.withColumns({c: F.col("study")[0][c] for c in RELEASE_COLUMNS})

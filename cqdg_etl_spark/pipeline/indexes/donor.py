@@ -7,13 +7,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cqdg_etl_spark.pipeline.indexes import summary as S
-from cqdg_etl_spark.pipeline.indexes.common import file_size
-from cqdg_etl_spark.pipeline.models import Metadata
+from cqdg_etl_spark.pipeline.indexes.common import file_size, with_release_columns
 
 
-def build_donor_index(
-    study: DataFrame, metadata: Metadata, data: dict[str, DataFrame]
-) -> DataFrame:
+def build_donor_index(study: DataFrame, data: dict[str, DataFrame]) -> DataFrame:
     donor = data["donor"]
     dx = data["diagnosisPerDonorAndStudy"]
     phen = data["phenotypesPerStudyIdAndDonor"]
@@ -81,10 +78,5 @@ def build_donor_index(
             F.col("files_per_donor_per_study").alias("files"),
             "summary",
         )
-        .withColumn("dictionary_version", F.lit(metadata.dictionary_version))
-        .withColumn("study_version", F.lit(metadata.study_version))
-        .withColumn(
-            "study_version_creation_date",
-            F.lit(metadata.study_version_creation_date),
-        )
+        .transform(with_release_columns)
     )

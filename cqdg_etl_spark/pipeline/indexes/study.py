@@ -13,12 +13,9 @@ from pyspark.sql import functions as F
 
 from cqdg_etl_spark.pipeline.indexes import summary as S
 from cqdg_etl_spark.pipeline.indexes.common import file_size
-from cqdg_etl_spark.pipeline.models import Metadata
 
 
-def build_study_index(
-    study: DataFrame, metadata: Metadata, data: dict[str, DataFrame]
-) -> DataFrame:
+def build_study_index(study: DataFrame, data: dict[str, DataFrame]) -> DataFrame:
     donor = data["donor"]
     dx = data["diagnosisPerDonorAndStudy"]
     phen = data["phenotypesPerStudyIdAndDonor"]
@@ -70,10 +67,4 @@ def build_study_index(
         study.join(donors_group, ["study_id"], "left")
         .join(files_group, ["study_id"], "left")
         .join(S.study_summary(donor, file, data), ["study_id"], "left")
-        .withColumn("dictionary_version", F.lit(metadata.dictionary_version))
-        .withColumn("study_version", F.lit(metadata.study_version))
-        .withColumn(
-            "study_version_creation_date",
-            F.lit(metadata.study_version_creation_date),
-        )
     )

@@ -20,10 +20,17 @@ def sanitize(name: str) -> str:
     return base.lower()
 
 
+# The release metadata columns: stamped on the study rows by pre-process,
+# carried by every index document and partitioning every index tree
+# (reference: ProcessETLConfig.scala:36-38).
+RELEASE_COLUMNS = ("dictionary_version", "study_version", "study_version_creation_date")
+
+
 @dataclass(frozen=True)
 class Metadata:
     """Release metadata extracted from a 1-row frame
-    (reference: models/Metadata.scala:3-5)."""
+    (reference: models/Metadata.scala:3-5); its fields are
+    ``RELEASE_COLUMNS``."""
 
     study_version: str
     study_version_creation_date: str
@@ -32,14 +39,11 @@ class Metadata:
 
 @dataclass
 class NamedFrame:
-    """A DataFrame plus lineage metadata
+    """A DataFrame and its dataset name
     (reference: models/NamedDataFrame.scala:5-11)."""
 
     name: str
     df: DataFrame
-    study_version: str = ""
-    study_version_creation_date: str = ""
-    dictionary_version: str = ""
 
 
 @dataclass(frozen=True)

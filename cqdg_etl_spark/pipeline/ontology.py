@@ -13,7 +13,10 @@ ICD-10) and the ontology term table
 2. ``add_ancestors_to_term`` groups, per ``keys`` (by default study and
    donor), the union of tagged terms and all their exploded ancestors,
    each with its normalized age_at_event array, nested as array<struct>
-   (the donor-document "mondo"/"icd"/phenotype fields).
+   (the donor-document "mondo"/"icd"/phenotype fields). A tagged term
+   whose ``ancestors`` is empty or NULL gets one all-NULL ancestor entry:
+   a reference quirk (its ``explode_outer``, ProcessETLUtils.scala:275),
+   kept like the summary's ``COUNT(DISTINCT *)`` rule.
 
 Scale: the term table (ontologies are ≤ ~100k rows) is broadcast; the
 only shuffles are the two groupBys keyed on ``keys`` (then the term).

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cqdg_etl_spark.pipeline.clients import Dictionary, IdResolver
-from cqdg_etl_spark.pipeline.models import Metadata, NamedFrame, sanitize
+from cqdg_etl_spark.pipeline.models import RELEASE_COLUMNS, Metadata, NamedFrame, sanitize
 from cqdg_etl_spark.sources import read_multiline_json, read_tsv, write_parquet
 
 # entity tag -> business key columns (reference: PreProcessUtils.scala:17-91)
@@ -143,25 +143,10 @@ class PreProcessETL:
             to_drop = [c for c in with_ids.columns if c not in keep]
             validated = with_ids.drop(*to_drop)
             if name == "study":
-                validated = (
-                    validated.withColumn(
-                        "dictionary_version", F.lit(metadata.dictionary_version)
-                    )
-                    .withColumn("study_version", F.lit(metadata.study_version))
-                    .withColumn(
-                        "study_version_creation_date",
-                        F.lit(metadata.study_version_creation_date),
-                    )
+                validated = validated.withColumns(
+                    {c: F.lit(getattr(metadata, c)) for c in RELEASE_COLUMNS}
                 )
-            out.append(
-                NamedFrame(
-                    name,
-                    validated,
-                    metadata.study_version,
-                    metadata.study_version_creation_date,
-                    metadata.dictionary_version,
-                )
-            )
+            out.append(NamedFrame(name, validated))
         return out
 
     def load(self, frames: list[NamedFrame]) -> None:

@@ -2,7 +2,6 @@ from cqdg_etl_spark.sources.readers import (
     read_multiline_json,
     read_ndjson,
     read_parquet,
-    read_table,
     read_tsv,
 )
 from cqdg_etl_spark.sources.writers import (
@@ -16,7 +15,6 @@ __all__ = [
     "read_multiline_json",
     "read_ndjson",
     "read_parquet",
-    "read_table",
     "write_parquet",
     "write_partitioned_json",
     "write_range_sorted_parquet",

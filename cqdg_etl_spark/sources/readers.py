@@ -10,7 +10,8 @@ Reference semantics being reproduced:
 - S4 parquet scan (reference: processes/ProcessETLConfig.scala:17-28).
 
 The reference's JSON-literal scan (S5, processes/PreProcessUtils.scala:96)
-is not kept: the HTTP ID-server port parses its response on the driver.
+is not kept: it parses the ID server's answer, and internal ids are
+derived on the executors instead (``pipeline/clients.py``).
 
 All readers return lazy logical plans; Catalyst applies column pruning
 and (for parquet) predicate pushdown downstream.
@@ -52,8 +53,3 @@ def read_ndjson(
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one of the harness testdata tables from an sf directory."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -43,6 +43,7 @@ from cqdg_etl_spark.pipeline.fixtures import (
     write_ontology_fixtures,
 )
 from cqdg_etl_spark.pipeline.preprocess import PreProcessETL
+from tests.test_pipeline import expected_internal_id
 
 GOLDEN = Path(__file__).parent / "golden"
 TREES = ("studies", "donors", "files")
@@ -107,26 +108,29 @@ def write_edge_fixtures(d: str) -> None:
     ])
 
 
-def run_release(spark, write_raw, root: str) -> dict:
+def run_release(spark, write_raw, root: str, keycloak=None) -> dict:
     """Pre-process and process one release under ``root``; returns the
     index frames by tree name."""
     raw, onto, dictionary = f"{root}/raw", f"{root}/ontology", f"{root}/dictionary.json"
     write_raw(raw)
     write_ontology_fixtures(onto)
     write_dictionary(dictionary)
-    return process_release(spark, raw, onto, dictionary, root)
+    return process_release(spark, raw, onto, dictionary, root, keycloak)
 
 
-def process_release(spark, raw: str, onto: str, dictionary: str, root: str) -> dict:
+def process_release(
+    spark, raw: str, onto: str, dictionary: str, root: str, keycloak=None
+) -> dict:
     """Pre-process and process a written release; the trees go to
-    ``root/indexes``. Returns the index frames by tree name."""
+    ``root/indexes``. Returns the index frames by tree name. The Keycloak
+    port defaults to a disabled recorder."""
     PreProcessETL(
         spark, FixtureDictionary(dictionary), DeterministicIdResolver(),
         raw, f"{root}/with-ids",
     ).run()
     trees = ProcessETL(
         spark, f"{root}/with-ids", onto, f"{root}/indexes",
-        keycloak=RecordingKeycloak(enabled=False),
+        keycloak=keycloak or RecordingKeycloak(enabled=False),
     ).run()
     return dict(zip(TREES, trees))
 
@@ -326,6 +330,39 @@ def test_phenotype_half_without_rows_is_absent(spark, tmp_path):
         a["key"]: a["donors"] for a in st01["summary"]["clinical_data_available"]
     }
     assert counted["phenotype"] == 2  # PT01 and PT02
+
+
+def write_unpublished_file_fixtures(d: str) -> None:
+    """The 3-donor fixture plus file rows that test the files tree's inner
+    joins: ``f5.gvcf`` names an absent study, ``f6.gvcf`` an absent donor,
+    and ``f7.bam`` has two ST01 rows of which only PT01's donor exists."""
+    write_clinical_fixtures(d)
+    _append_tsv(f"{d}/file.tsv", [
+        ["BS01", donor, study, name, "genomics", "gvcf", "TRUE", "WGS",
+         "controlled", "gvcf", "illumina", "SNV"]
+        for donor, study, name in (
+            ("PT01", "ST09", "f5.gvcf"),
+            ("PT09", "ST01", "f6.gvcf"),
+            ("PT01", "ST01", "f7.bam"),
+            ("PT08", "ST01", "f7.bam"),
+        )
+    ])
+
+
+def test_keycloak_ids_are_the_written_file_ids(spark, tmp_path):
+    """Keycloak gets exactly the ids of the written files tree: a file of an
+    absent study or whose (study, file name) has no known donor is left
+    out; both rows of a (study, file name) with a known donor are kept."""
+    keycloak = RecordingKeycloak(enabled=True)
+    run_release(spark, write_unpublished_file_fixtures, str(tmp_path), keycloak)
+    written = {d["internal_file_id"] for d in read_tree(f"{tmp_path}/indexes/files")}
+    assert keycloak.created == written
+    assert written == {
+        expected_internal_id("file", *key)
+        for key in (("ST01", "PT01", "f1.gvcf"), ("ST01", "PT01", "f2.cram"),
+                    ("ST02", "PT03", "f3.gvcf"), ("ST01", "PT01", "f7.bam"),
+                    ("ST01", "PT08", "f7.bam"))
+    }
 
 
 if __name__ == "__main__":

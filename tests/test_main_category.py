@@ -48,8 +48,9 @@ def anc(id_: str, parents: list[str], name: str | None = None) -> tuple:
     return (id_, name or f"term {id_}", parents)
 
 
-def main_categories(spark, ontology: str, terms: dict[str, list | None]) -> dict:
-    """``{code: main_category}`` for one tagged row per term code."""
+def enrich(spark, ontology: str, terms: dict[str, list | None]):
+    """``add_ancestors_to_term`` over one row per term code, all of one
+    donor aged 40, with internal ids ``int0``, ``int1``, ..."""
     code_col, etype, internal_id = ONTOLOGY[ontology]
     term_rows = [
         (code, f"term {code}", [], ancestors, True) for code, ancestors in terms.items()
@@ -59,10 +60,15 @@ def main_categories(spark, ontology: str, terms: dict[str, list | None]) -> dict
         ["study_id", "submitter_donor_id", f"submitter_{etype}_id", "age_at_event",
          code_col, internal_id],
     )
-    enriched = add_ancestors_to_term(
+    return add_ancestors_to_term(
         code_col, ontology, internal_id, data, spark.createDataFrame(term_rows, TERMS)
     )
-    return {r["id"]: r["main_category"] for r in enriched.tagged.collect()}
+
+
+def main_categories(spark, ontology: str, terms: dict[str, list | None]) -> dict:
+    """``{code: main_category}`` for one tagged row per term code."""
+    tagged = enrich(spark, ontology, terms).tagged
+    return {r["id"]: r["main_category"] for r in tagged.collect()}
 
 
 def test_first_qualifying_ancestor_in_array_order_wins(spark):
@@ -110,3 +116,22 @@ def test_icd_block_rule_reads_the_ancestor_id(spark):
         ],
     })
     assert got == {"I21.0": "Ischaemic heart diseases (I20-I25)"}
+
+
+def test_term_without_ancestors_keeps_one_null_ancestor_entry(spark):
+    """A quirk kept from the reference, whose ``explode_outer`` over
+    ``ancestors`` (ProcessETLUtils.scala:275) gives a tagged term with an
+    empty or NULL ``ancestors`` one ancestor entry whose node fields are
+    all NULL."""
+    [row] = enrich(spark, "hpo", {"HP:2": [], "HP:3": None}).grouped.collect()
+    ancestors = sorted(
+        (e.asDict() for e in row["hpo"] if not e["is_tagged"]),
+        key=lambda e: e["internal_phenotype_id"],
+    )
+    assert len(row["hpo"]) == 4  # the two tagged terms and one entry each
+    assert ancestors == [
+        {"phenotype_id": None, "name": None, "display_name": None, "parents": None,
+         "age_at_event": [40], "internal_phenotype_id": i, "is_leaf": False,
+         "is_tagged": False}
+        for i in ("int0", "int1")
+    ]
